@@ -34,6 +34,12 @@ object GraftSession {
         spark.experimental.extraOptimizations :+
           org.apache.spark.sql.graft.AnnTopKRule(spark)
     }
+    // Vector-SQL exact top-k over a pinned PackedScan: declines unless
+    // the answer provably equals Spark's plan, so it needs no gate.
+    if (!spark.experimental.extraStrategies.contains(graft.plans.PackedTopKStrategy)) {
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.PackedTopKStrategy
+    }
     // Projection selection (ClickHouse ADD PROJECTION analog): no-op
     // unless a base table is registered in ProjectionCatalog.
     val hasProj = spark.experimental.extraOptimizations

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** IVF (inverted-file) ANN index: k-means centroids + per-vector cluster
   * assignment; queries prune to the `nprobe` nearest centroids and
@@ -145,7 +146,12 @@ object AnnIndex {
     * structure, and too-few centroids force wide probes.
     */
   def fit(dfIn: DataFrame, embCol: String, idCol: String, k: Int, iters: Int): (Model, DataFrame) = {
-    val df = dfIn.cache() // scanned iters+1 times during Lloyd's
+    // scanned iters+1 times during Lloyd's; released after the indexed
+    // table materializes, unless the caller had cached it already (a
+    // cache left behind would pin a copy of the input and silently
+    // redirect unrelated SQL over it)
+    val ownsCache = dfIn.storageLevel == StorageLevel.NONE
+    val df = dfIn.cache()
     val sampleN = math.min(8192, math.max(k * 8, 256))
     val sample: Array[Array[Double]] =
       df.orderBy(col(idCol)).limit(sampleN).select(embCol).collect()
@@ -179,6 +185,8 @@ object AnnIndex {
     // cluster_id — same contract, durable.
     val indexed = withAssignment(df, embCol, centroids).cache()
     indexed.count()
+    // non-cascading: the loaded `indexed` cache keeps serving
+    if (ownsCache) df.unpersist()
     (model, indexed)
   }
 

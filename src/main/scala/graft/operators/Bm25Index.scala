@@ -660,10 +660,14 @@ final class Bm25Index private (
     // pruning) can drop the CollectMetrics node — getOrEmpty is the
     // BOUNDED wait (get could block forever on a Spark that never fires
     // for a pruned node), and the direct agg is the fallback (one extra
-    // job on a trivial batch only)
+    // job on a trivial batch only). An RDD-backed batch can report n = 0
+    // for a batch that produced postings, so a zero is trusted only when
+    // the postings are empty.
     val statsRow = org.apache.spark.sql.graft.Bridge.observationGetOrEmpty(obs)
+    val observed = statsRow.contains("n") &&
+      (statsRow("n").asInstanceOf[Long] > 0 || bdf.isEmpty)
     val (bN, bSumDl) =
-      if (statsRow.contains("n"))
+      if (observed)
         (statsRow("n").asInstanceOf[Long],
           Option(statsRow("sdl")).map(_.asInstanceOf[Long]).getOrElse(0L))
       else toks.agg(count(lit(1)), sum(col("dl")))

@@ -95,6 +95,13 @@ final case class Catalog(spark: SparkSession, root: String) {
     if (manifestEnabled) commitManifest(table, 0, treeEntries(table), Nil)
   }
 
+  /** Remove the table: its data tree and every memo keyed by its path. */
+  def drop(table: String): Unit = {
+    fs.rmTree(path(table))
+    evictSidecarMemos(table)
+    invalidateProjections(table)
+  }
+
   /** Append rows. `partitionBy` (the table's declared layout) must be
     * passed for partitioned tables whose directories may not exist yet —
     * an empty partitioned create writes no `col=value` dirs, so layout

@@ -845,14 +845,16 @@ object ChDdl {
               val name = k.drop((cat.root + "::").length)
               defs.remove(k); mvDefs.remove(k); seqs.remove(k)
               Catalog.registerWriteOptions(s"${cat.root}/$name", Map.empty)
-              cat.fs.rmTree(s"${cat.root}/$name")
+              cat.drop(name)
             }
           emptyResult(spark)
         } else {
+          // CH DROP TABLE removes the data too, so the name can be reused
           val (t, _) = tableNameAt(toks, i)
           defs.remove(key(cat, t)); seqs.remove(key(cat, t))
           mvDefs.remove(key(cat, t))
           Catalog.registerWriteOptions(s"${cat.root}/$t", Map.empty)
+          cat.drop(t)
           emptyResult(spark)
         }
       case _ =>

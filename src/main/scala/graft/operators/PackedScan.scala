@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -107,10 +109,27 @@ final class PackedScan private (
   def applyTtl(tsCol: String, cutoff: String): Int =
     deleteWhere(SelfQueryFilter.Lt(tsCol, SelfQueryFilter.T(cutoff)))
 
-  /** Exact top-k (id, cosine distance), ascending by (dist, id). */
+  /** What [[PackedScan.buildCached]] packed this instance from, for SQL
+    * routing ([[graft.plans.PackedTopKStrategy]]). Cleared by
+    * [[unpersist]], so an evicted or released instance never answers SQL;
+    * insert and compact children never carry one.
+    */
+  @volatile private[graft] var source: Option[PackedScan.Source] = None
+
+  /** Exact top-k (id, cosine distance), ascending by (dist, id) in
+    * Spark's double order ([[PackedScan.before]]).
+    */
   def topK(q: Array[Float], k: Int,
       filter: Option[SelfQueryFilter.Node] = None): Array[(Long, Double)] =
     topKBatch(Array(q), k, filter).head
+
+  /** [[topK]] over the rows as built, tombstones not applied: the answer
+    * the SQL over [[source]] gives. The router declines a scan with
+    * tombstones; this keeps a delete racing a routed query out of it too.
+    */
+  private[graft] def topKAsBuilt(q: Array[Float], k: Int,
+      filter: Option[SelfQueryFilter.Node]): Array[(Long, Double)] =
+    merge(1, k, topKBatchPerPart(Array(q), k, filter, Array.emptyLongArray)).head
 
   /** BATCHED exact top-k: Q queries answered in ONE Spark job.
     *
@@ -140,13 +159,16 @@ final class PackedScan private (
       filter: Option[SelfQueryFilter.Node] = None): Array[Array[(Long, Double)]] = {
     if (qs.isEmpty) return Array.empty
     if (k <= 0) return Array.fill(qs.length)(Array.empty)
-    val nq = qs.length
-    val perPart = topKBatchPerPart(qs, k, filter)
-    Array.tabulate(nq) { qi =>
-      perPart.iterator.flatMap(_(qi))
-        .toArray.sortBy { case (id, d) => (d, id) }.take(k)
-    }
+    merge(qs.length, k, topKBatchPerPart(qs, k, filter))
   }
+
+  /** Driver merge of the per-partition lists: global (dist, id) order. */
+  private def merge(nq: Int, k: Int,
+      perPart: Array[Array[Array[(Long, Double)]]]): Array[Array[(Long, Double)]] =
+    Array.tabulate(nq) { qi =>
+      perPart.iterator.flatMap(_(qi)).toArray
+        .sortWith((a, b) => PackedScan.before(a._2, a._1, b._2, b._1)).take(k)
+    }
 
   /** The per-partition leg of [[topKBatch]]: one entry per partition,
     * each holding Q local top-k lists of ≤ k rows (bounded insertion —
@@ -155,17 +177,19 @@ final class PackedScan private (
     * query) instead of trusting the structural bound.
     */
   private[graft] def topKBatchPerPart(qs: Array[Array[Float]], k: Int,
-      filter: Option[SelfQueryFilter.Node] = None)
+      filter: Option[SelfQueryFilter.Node] = None,
+      tomb: Array[Long] = tombstones) // one consistent snapshot per batch
       : Array[Array[Array[(Long, Double)]]] = {
     if (qs.isEmpty || k <= 0) return Array.empty
     val nq = qs.length
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
-    val tomb = tombstones // one consistent snapshot for the whole batch
     blocks.mapPartitions { it =>
       // bounded insertion top-k per (partition, query): k is tiny (10ish),
-      // so the branch-predictable insertion beats a heap
-      val bestD = Array.fill(nq)(Array.fill(k)(Double.PositiveInfinity))
-      val bestId = Array.fill(nq)(Array.fill(k)(Long.MaxValue))
+      // so the branch-predictable insertion beats a heap. Slots past
+      // found(qi) are empty, so a NaN distance (zero-norm row or query)
+      // is admitted while the list has room and sorts after every number.
+      val bestD = Array.fill(nq)(new Array[Double](k))
+      val bestId = Array.fill(nq)(new Array[Long](k))
       val found = new Array[Int](nq)
       val hasTomb = tomb.length > 0
       it.foreach { b =>
@@ -185,15 +209,14 @@ final class PackedScan private (
               val d = VectorKernels.cosineStrided(b.vecs, off, dim, qs(qi), qnorms(qi))
               val bd = bestD(qi)
               val bi = bestId(qi)
-              val worst = bd(k - 1)
-              if (d < worst || (d == worst && id < bi(k - 1))) {
-                var p = k - 1
-                while (p > 0 && (d < bd(p - 1) ||
-                    (d == bd(p - 1) && id < bi(p - 1)))) {
+              val f = found(qi)
+              if (f < k || PackedScan.before(d, id, bd(k - 1), bi(k - 1))) {
+                var p = if (f < k) f else k - 1
+                while (p > 0 && PackedScan.before(d, id, bd(p - 1), bi(p - 1))) {
                   bd(p) = bd(p - 1); bi(p) = bi(p - 1); p -= 1
                 }
                 bd(p) = d; bi(p) = id
-                if (found(qi) < k) found(qi) += 1
+                if (f < k) found(qi) = f + 1
               }
               qi += 1
             }
@@ -296,7 +319,16 @@ final class PackedScan private (
     * Freeing a whole insert chain = unpersist every instance in it, which
     * is what every lifecycle here does (q142's `finally`).
     */
-  def unpersist(): Unit = persisted.foreach(_.unpersist())
+  def unpersist(): Unit = {
+    source = None
+    persisted.foreach(_.unpersist())
+  }
+
+  /** The pinned metadata kinds by column name ([[MetaPredicate.kindOf]]). */
+  private[graft] def metaKindOf: Map[String, Int] = metaNames.zip(metaKinds).toMap
+
+  /** False once the SparkContext that holds the blocks has stopped. */
+  private[graft] def live: Boolean = !blocks.sparkContext.isStopped
 }
 
 object PackedScan {
@@ -320,7 +352,72 @@ object PackedScan {
     val metaKey = if (metaCols.isEmpty) "" else metaCols.mkString("#", ",", "")
     ServingCache.getOrBuild(s"packed#$cacheKey#$idCol#$embCol$metaKey") {
       val ps = build(df, idCol, embCol, metaCols)
+      ps.source = Source.of(df, idCol, embCol, metaCols)
       (ps, ps.bytes, () => ps.unpersist())
+    }
+  }
+
+  /** Live [[buildCached]] instances that recorded their source. */
+  private[graft] def routable: Seq[PackedScan] =
+    ServingCache.residents.collect { case ps: PackedScan if ps.source.isDefined => ps }
+
+  /** Spark's ascending double order for `ORDER BY dist, id`: NaN after
+    * every number, NaNs equal to each other, -0.0 equal to 0.0; ties break
+    * by id. Numbers take the first two tests.
+    */
+  private[graft] def before(d: Double, id: Long, d2: Double, id2: Long): Boolean =
+    if (d < d2) true
+    else if (d > d2) false
+    else if (d == d2 || (d != d && d2 != d2)) id < id2
+    else d2 != d2 // exactly one NaN: the number comes first
+
+  /** What a build read: the source's analyzed plan, the (path, size,
+    * mtime) listing its file indexes held at build, and the positions in
+    * `plan.output` of the pinned id, embedding and metadata columns.
+    */
+  final case class Source(plan: LogicalPlan, listing: Seq[(String, Long, Long)],
+      idPos: Int, embPos: Int, metaPos: Map[Int, String])
+
+  object Source {
+    /** None unless every leaf of `df`'s plan is a file relation over an
+      * in-memory listing, the plan is deterministic and every pinned column
+      * names exactly one output column.
+      */
+    def of(df: DataFrame, idCol: String, embCol: String,
+        metaCols: Seq[String]): Option[Source] = {
+      val plan = df.queryExecution.analyzed
+      val out = plan.output
+      val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+      def pos(name: String): Option[Int] =
+        out.indices.filter(i => resolver(out(i).name, name)) match {
+          case Seq(i) => Some(i)
+          case _ => None
+        }
+      for {
+        ls <- listing(plan) if plan.deterministic
+        idPos <- pos(idCol)
+        embPos <- pos(embCol)
+        meta = metaCols.flatMap(m => pos(m).map(_ -> m))
+        if meta.length == metaCols.length
+      } yield Source(plan, ls, idPos, embPos, meta.toMap)
+    }
+
+    /** The file listing of every leaf, read from the in-memory file
+      * indexes (no file-system call); None if a leaf is anything else.
+      */
+    def listing(plan: LogicalPlan): Option[Seq[(String, Long, Long)]] = {
+      val leaves = plan.collectLeaves().map {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location match {
+            case ix: InMemoryFileIndex => Some(ix.allFiles().map(f =>
+              (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
+            case _ => None
+          }
+          case _ => None
+        }
+        case _ => None
+      }
+      if (leaves.isEmpty || leaves.exists(_.isEmpty)) None else Some(leaves.flatten.flatten)
     }
   }
 

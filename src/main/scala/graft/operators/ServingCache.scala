@@ -62,6 +62,13 @@ object ServingCache {
 
   def contains(key: String): Boolean = synchronized(lru.containsKey(key))
 
+  /** Snapshot of the resident values; leaves the LRU order untouched. */
+  def residents: Seq[AnyRef] = synchronized {
+    val b = Seq.newBuilder[AnyRef]
+    lru.values.forEach(e => b += e.value)
+    b.result()
+  }
+
   /** One lock object per key, so concurrent builds of the SAME key
     * serialize (the loser of the old optimistic race would unpersist its
     * own DataFrame — but Spark's CacheManager keys cached data by logical

@@ -260,9 +260,6 @@ abstract class PackedDistanceExpression extends BinaryExpression with ImplicitCa
     nullSafeCodeGen(ctx, ev, (x, y) =>
       s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.cosine(" +
         s"org.apache.spark.sql.graft.PackedOps.$decodeFn($x), $y.toFloatArray());")
-
-  protected def dbl(v: Double): String =
-    s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToLongBits(v)}L)"
 }
 
 /** `cosine_distance_packed(bin_fp32, query)` — bit-identical to
@@ -283,7 +280,7 @@ case class CosineDistancePacked(left: Expression, right: Expression)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     queryVec(ctx) match {
       case Some((qv, arr)) =>
-        val qnorm = math.sqrt(VectorKernels.norm2(arr))
+        val qnorm = VectorKernels.queryNormRef(ctx, math.sqrt(VectorKernels.norm2(arr)))
         nullSafeCodeGen(ctx, ev, (x, _) => {
           // Walk the byte[] in place (no per-row copy), 4 independent
           // accumulator chains: the plain loop is LATENCY-bound on the
@@ -317,7 +314,7 @@ case class CosineDistancePacked(left: Expression, right: Expression)
              |}
              |final double ${d.head}T = (${d(0)} + ${d(1)}) + (${d(2)} + ${d(3)});
              |final double ${m.head}T = (${m(0)} + ${m(1)}) + (${m(2)} + ${m(3)});
-             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * ${dbl(qnorm)});
+             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * $qnorm);
            """.stripMargin
         })
       case None => genGeneric(ctx, ev)
@@ -343,7 +340,7 @@ case class CosineDistanceF16(left: Expression, right: Expression)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     queryVec(ctx) match {
       case Some((qv, arr)) =>
-        val qnorm = math.sqrt(VectorKernels.norm2(arr))
+        val qnorm = VectorKernels.queryNormRef(ctx, math.sqrt(VectorKernels.norm2(arr)))
         val tab = ctx.addReferenceObj("graftF16Table", F16.table, "float[]")
         nullSafeCodeGen(ctx, ev, (x, _) => {
           // decode via table lookup, then the same 4-chain order as every
@@ -378,7 +375,7 @@ case class CosineDistanceF16(left: Expression, right: Expression)
              |}
              |final double ${d.head}T = (${d(0)} + ${d(1)}) + (${d(2)} + ${d(3)});
              |final double ${m.head}T = (${m(0)} + ${m(1)}) + (${m(2)} + ${m(3)});
-             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * ${dbl(qnorm)});
+             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * $qnorm);
            """.stripMargin
         })
       case None => genGeneric(ctx, ev)

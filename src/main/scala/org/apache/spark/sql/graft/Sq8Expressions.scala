@@ -73,7 +73,7 @@ case class CosineDistanceSq8(left: Expression, right: Expression,
       var qn2 = 0.0
       var i = 0
       while (i < arr.length) { val y = arr(i).toDouble; qn2 += y * y; i += 1 }
-      val qnormBits = java.lang.Double.doubleToLongBits(math.sqrt(qn2))
+      val qnorm = VectorKernels.queryNormRef(ctx, math.sqrt(qn2))
       nullSafeCodeGen(ctx, ev, (x, _) => {
         val n = ctx.freshName("n"); val j = ctx.freshName("i")
         val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
@@ -85,7 +85,7 @@ case class CosineDistanceSq8(left: Expression, right: Expression,
            |  final double $xi = (double) ((($x[$j] & 0xff) * $sc[$j]) + $mn[$j]);
            |  $dot += $xi * (double) $qv[$j]; $nx += $xi * $xi;
            |}
-           |${ev.value} = 1.0 - $dot / (java.lang.Math.sqrt($nx) * java.lang.Double.longBitsToDouble(${qnormBits}L));
+           |${ev.value} = 1.0 - $dot / (java.lang.Math.sqrt($nx) * $qnorm);
          """.stripMargin
       })
     } else {

@@ -90,6 +90,16 @@ object VectorKernels {
     1.0 - dot / (math.sqrt(nx) * math.sqrt(norm2(y)))
   }
 
+  /** A folded query's norm as a generated-class reference (unboxed at the
+    * use site). Pasting it into the source as a literal made the generated
+    * code differ per query vector, so every new norm missed Spark's code
+    * cache and paid a Janino compile; passed by reference, like the query
+    * vector itself, one compiled class serves every query.
+    */
+  def queryNormRef(ctx: CodegenContext, qnorm: Double): String =
+    ctx.addReferenceObj("graftQueryNorm", java.lang.Double.valueOf(qnorm),
+      "java.lang.Double") + ".doubleValue()"
+
   /** The same canonical reduction over a STRIDED slice xs[off, off+dim) —
     * the in-memory packed-block serving path ([[graft.operators
     * .PackedScan]]) computes against vectors laid out contiguously in one
@@ -158,10 +168,6 @@ abstract class VectorBinaryExpression extends BinaryExpression with ImplicitCast
       }
     } else None
 
-  /** Exact double bits of a codegen-time constant, embedded losslessly. */
-  protected def dbl(v: Double): String =
-    s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToLongBits(v)}L)"
-
   protected def genLoop(ctx: CodegenContext, ev: ExprCode,
       finish: (String, String, String, String) => String,
       needNy: Boolean = true): ExprCode =
@@ -211,7 +217,7 @@ case class CosineDistance(left: Expression, right: Expression)
         // interpreted eval, and CosineDistancePacked's folded loop all
         // produce BIT-identical doubles (asserted in PackedVectorSpec /
         // ExpressionSpec).
-        val qnorm = math.sqrt(VectorKernels.norm2(arr))
+        val qnorm = VectorKernels.queryNormRef(ctx, math.sqrt(VectorKernels.norm2(arr)))
         nullSafeCodeGen(ctx, ev, (x, _) => {
           val n = ctx.freshName("n"); val j = ctx.freshName("i")
           val k = ctx.freshName("k"); val xa = ctx.freshName("xa")
@@ -241,7 +247,7 @@ case class CosineDistance(left: Expression, right: Expression)
              |}
              |final double ${d.head}T = (${d(0)} + ${d(1)}) + (${d(2)} + ${d(3)});
              |final double ${m.head}T = (${m(0)} + ${m(1)}) + (${m(2)} + ${m(3)});
-             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * ${dbl(qnorm)});
+             |${ev.value} = 1.0 - ${d.head}T / (java.lang.Math.sqrt(${m.head}T) * $qnorm);
            """.stripMargin
         })
       case None =>

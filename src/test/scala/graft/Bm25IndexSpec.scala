@@ -247,6 +247,22 @@ class Bm25IndexSpec extends AnyFunSuite {
     } finally { ix2.unpersist(); ix.unpersist() }
   }
 
+  test("insert of an RDD-backed batch equals a rebuild") {
+    val a = docs.filter(col("doc_id") % 4 =!= 3)
+    val local = docs.filter(col("doc_id") % 4 === 3)
+    // this shape made the batch's row-count Observation report 0
+    val b = spark.createDataFrame(spark.sparkContext.parallelize(local.collect().toSeq), local.schema)
+      .groupBy("doc_id").agg(first("text").as("text")).persist()
+    b.count()
+    val ix = Bm25Index.build(a, "doc_id", "text", shards = 4)
+    val ix2 = ix.insert(b, "doc_id", "text")
+    try {
+      assert(ix2.docCount == docs.count())
+      for (terms <- Seq(Seq("query"), Seq("query", "scan", "data"), Seq("vector", "merge")))
+        close(ix2.topK(terms, 25).toSeq, fullScan(docs, terms, 25))
+    } finally { ix2.unpersist(); ix.unpersist(); b.unpersist() }
+  }
+
   test("empty insert batch is a no-op returning the same instance") {
     assert(index.insert(docs.filter(lit(false)), "doc_id", "text") eq index)
   }

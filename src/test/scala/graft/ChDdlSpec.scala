@@ -674,6 +674,20 @@ class ChDdlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { ChDdl.view(cat, "analytics.a") }
   }
 
+  test("DROP TABLE removes the data: CREATE of the same name starts empty") {
+    val cat = freshCat("chddl_drop")
+    val x = ChDdl.execute(cat, _: String)
+    x("CREATE TABLE t (id Int64, s String) ENGINE = MergeTree ORDER BY id")
+    x("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    assert(x("SELECT count(*) FROM t").head().getLong(0) == 2)
+    x("DROP TABLE t")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(cat.root, "t")))
+    x("CREATE TABLE t (id Int64, s String) ENGINE = MergeTree ORDER BY id")
+    assert(x("SELECT count(*) FROM t").head().getLong(0) == 0)
+    x("INSERT INTO t VALUES (3, 'c')")
+    assert(x("SELECT id FROM t").collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
   test("materialized view: insert-trigger semantics, POPULATE, OPTIMIZE, drop") {
     val cat = freshCat("chddl_mv")
     val x = ChDdl.execute(cat, _: String)

@@ -186,6 +186,47 @@ class ExpressionSpec extends AnyFunSuite {
     assert(viaPackedInterp.toSeq == viaCodegen.toSeq)
   }
 
+  // The query norm rides into generated code as a reference, like the
+  // query vector: a new query vector reuses the compiled class.
+  test("folded cosine kernels: a new query vector compiles nothing, results == interpreted") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.{CosineDistance, CosineDistanceF16, CosineDistancePacked,
+      CosineDistanceSq8, Sq8Encode, VecPack, VecPackF16}
+    import org.apache.spark.sql.graft.Bridge.{toColumn, toExpr}
+    import org.apache.spark.sql.types._
+    val dim = HashEmbedder.DefaultDim
+    val mins = Array.fill(dim)(-1f)
+    val scales = Array.fill(dim)(2f / 255)
+    val emb = toExpr(col("embedding"))
+    // (kernel, stored column, its type)
+    val kernels: Seq[(String, (Expression, Expression) => Expression, Expression, DataType)] = Seq(
+      ("cosine", CosineDistance(_, _), emb, ArrayType(FloatType)),
+      ("packed", CosineDistancePacked(_, _), VecPack(emb), BinaryType),
+      ("f16", CosineDistanceF16(_, _), VecPackF16(emb), BinaryType),
+      ("sq8", CosineDistanceSq8(_, _, mins, scales), Sq8Encode(emb, mins, scales), BinaryType))
+    val src = Tables.embeddings(spark, TestSpark.sf).limit(48)
+    def qLit(q: Array[Float]) = Literal.create(new GenericArrayData(q), ArrayType(FloatType))
+    kernels.foreach { case (name, k, stored, t) =>
+      def run(q: Array[Float]) =
+        src.select(toColumn(k(stored, qLit(q)))).as[Double].collect().toSeq
+      val xs = src.select(toColumn(stored)).collect().map(_.get(0))
+      def interp(q: Array[Float]) = xs.toSeq.map { x =>
+        val v = if (t == BinaryType) x else new GenericArrayData(x.asInstanceOf[scala.collection.Seq[Float]].toArray)
+        k(Literal.create(v, t), qLit(q)).eval(null).asInstanceOf[Double]
+      }
+      run(HashEmbedder.embed(s"$name first query"))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q2 = HashEmbedder.embed(s"$name second, different query").map(_ * 3f)
+      val got = run(q2)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        s"$name: a second query vector compiled new code")
+      assert(got.map(java.lang.Double.doubleToLongBits) ==
+        interp(q2).map(java.lang.Double.doubleToLongBits), name)
+    }
+  }
+
   test("lsh_signature SQL fn accepts an explicit dim argument") {
     val wide = (0 until 128).map(i => (i % 7 - 3).toFloat)
     val df = Seq(wide).toDF("v")

@@ -70,7 +70,7 @@ class OperatorSpec extends AnyFunSuite {
     val plan = store.searchByVector(q, 5, Some(col("label") === 3))
       .queryExecution.executedPlan.toString
     // Another (possibly concurrent) suite may have cached the raw table
-    // (AnnIndex.fit does); Spark then substitutes InMemoryRelation for the
+    // (AnnIndex.fit does while it trains); Spark then substitutes InMemoryRelation for the
     // parquet scan. Either way the predicate must reach the SCAN node:
     // parquet PushedFilters, or InMemoryTableScan's filter list.
     val pushedToParquet =
@@ -92,6 +92,27 @@ class OperatorSpec extends AnyFunSuite {
       .searchByVector(q, 10).select("vec_id").as[Long].collect().toSet
     val recall = (ann & exact).size / 10.0
     assert(recall >= 0.7, s"recall=$recall ann=$ann exact=$exact")
+  }
+
+  test("AnnIndex.fit releases the input cache it created; indexed stays cached") {
+    import org.apache.spark.storage.StorageLevel
+    val input = embs.filter(col("vec_id") % 3 =!= 1)
+    val (_, indexed) = AnnIndex.fit(input, "embedding", "vec_id", k = 4, iters = 1)
+    try {
+      assert(input.storageLevel == StorageLevel.NONE, "fit left its input cached")
+      val loaded = indexed.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          r.cacheBuilder.isCachedColumnBuffersLoaded
+      }
+      assert(loaded == Seq(true), s"indexed not served from its loaded cache: $loaded")
+      assert(indexed.count() == input.count())
+      // an input the caller cached stays cached
+      val mine = embs.filter(col("vec_id") % 3 =!= 2).cache()
+      try {
+        AnnIndex.fit(mine, "embedding", "vec_id", k = 4, iters = 1)._2.unpersist()
+        assert(mine.storageLevel != StorageLevel.NONE)
+      } finally mine.unpersist()
+    } finally indexed.unpersist()
   }
 
   test("AnnIndex persisted: partition-pruned read, full probe == exact") {

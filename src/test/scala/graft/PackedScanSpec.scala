@@ -311,4 +311,27 @@ class PackedScanSpec extends AnyFunSuite {
     }
     assert(merged.map(_.toSeq).toSeq == manual)
   }
+
+  test("NaN distances order like the DataFrame scan: zero rows past k, zero query") {
+    val dim = HashEmbedder.DefaultDim
+    // every 7th row is a zero vector, so its distance to any query is NaN
+    val corpus = (0 until 90).map { i =>
+      (i.toLong, if (i % 7 == 0) Array.fill(dim)(0f) else HashEmbedder.embed(s"nan row $i"),
+        i % 3)
+    }.toDF("id", "embedding", "label")
+    val scan = PackedScan.build(corpus, "id", "embedding", Seq("label"))
+    val store = VectorStore(corpus, "embedding", Seq("id"))
+    def bits(xs: Seq[(Long, Double)]) = xs.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) }
+    val cases = Seq(
+      // k beyond the 26 non-NaN label-1 rows: the NaN rows come last, by id
+      (HashEmbedder.embed("nan probe"), 40, Some(F.Eq("label", F.I(1L)))),
+      (Array.fill(dim)(0f), 12, None))
+    try cases.foreach { case (q, k, f) =>
+      val got = scan.topK(q, k, f).toSeq
+      val ref = store.searchByVector(q, k, f.map(F.compile))
+        .select(col("id"), col("dist")).as[(Long, Double)].collect().toSeq
+      assert(got.exists(_._2.isNaN))
+      assert(bits(got) == bits(ref))
+    } finally scan.unpersist()
+  }
 }
