@@ -555,9 +555,12 @@ object Bench {
       s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","queries":$qs,$omitted"errors":$errCount,"sf":"$sfDir","cold_total":${math.rint(coldTotal * 1000) / 1000},"total_p1":${math.rint(totalP1 * 1000) / 1000},"total_p2":${math.rint(totalP2 * 1000) / 1000},"shuffle_mb":${shuffleBytes.get / 1048576},"spill_mb":${spillBytes.get / 1048576},"ann_recall10":$annRecall,"ann_scan_frac":0.25,"ann_curve":"$annCurve","ann_u_pq_recall10":${math.rint(annURecall * 1000) / 1000},"ann_u_pq_rerank_frac":${math.rint(annUFrac * 1000) / 1000},"ann_c_recall10":${math.rint(annCRecall * 1000) / 1000},"ann_c_scan_frac":${math.rint(annCFrac * 1000) / 1000},"graph_recall10":${math.rint(graphRecall * 1000) / 1000},"graph_visit_frac":${math.rint(graphFrac * 1000) / 1000},"graph_qps":${math.rint(graphQps * 10) / 10},"graph_batch_qps":${math.rint(graphBatchQps * 10) / 10},"ingest_chunks_per_sec":${ingestCps.toLong},"knn_vectors_per_sec":${knnServedVps.toLong},"knn_batch_vps":${knnServedVps.toLong},"knn_batch_q":$knnBatchQ,"knn_single_query_ms":${math.rint(knnSingleMs * 100) / 100},"knn_scan_vps":${knnScanVps.toLong},"knn_filtered_vps":${knnFilteredVps.toLong},"bm25_qps":${math.rint(bm25Qps * 10) / 10},"bm25_batch_qps":${math.rint(bm25BatchQps * 10) / 10},"bm25_insert_dps":${bm25InsertDps.toLong},"pq_codes_per_sec":${pqVps.toLong},"load_avg_start":$loadStart,"load_avg_end":${loadAvg()}}"""
     // LAST stdout write, after the session is down: the driver parses the
     // metric line from a bounded stdout tail, so nothing (Spark shutdown
-    // chatter, sbt epilogue — suppressed in build.sbt) may follow it.
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // chatter, sbt epilogue — suppressed in build.sbt) may follow it, and
+    // a throwing stop() must not lose a finished run's line.
+    try spark.stop()
+    finally {
+      println(line)
+      System.out.flush()
+    }
   }
 }

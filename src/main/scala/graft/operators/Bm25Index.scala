@@ -108,7 +108,7 @@ final class Bm25Index private (
     require(metaNames.nonEmpty,
       "idsWhere needs metadata columns pinned at build (metaCols)")
     val tomb = tombstones
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
       it.flatMap { b =>
         val pred = MetaPredicate.bind(filter, b.meta)
         (0 until b.metaDocs.length).iterator.collect {
@@ -117,8 +117,8 @@ final class Bm25Index private (
               java.util.Arrays.binarySearch(tomb, b.metaDocs(i)) < 0) =>
             b.metaDocs(i)
         }
-      }
-    }.distinct().collect().sorted
+      }.toArray
+    }.flatten.distinct.sorted
   }
 
   /** `DELETE WHERE` on the LIVE index: tombstone every doc matching the
@@ -193,7 +193,7 @@ final class Bm25Index private (
     }.fold((0L, 0L)) { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) }
     val bcDf = blocks.sparkContext.broadcast(
       scala.collection.Map.from(dfMap))
-    val nb = blocks.mapPartitions({ it =>
+    val nb = ServingCache.pin(blocks.mapPartitions({ it =>
       val rows = it.flatMap { b =>
         (0 until b.terms.length).iterator.flatMap { ti =>
           (b.starts(ti) until b.starts(ti + 1)).iterator
@@ -211,8 +211,7 @@ final class Bm25Index private (
         }
       }.toArray
       packRows(rows, names, kinds, (t, _) => bcDf.value(t)).iterator
-    }, preservesPartitioning = true)
-    nb.persist(StorageLevel.MEMORY_ONLY)
+    }, preservesPartitioning = true))
     val bytes2 = Bm25Index.blockBytes(nb)
     new Bm25Index(nb, nDocs, dlSum, names, kinds, bytes2)
   }
@@ -289,7 +288,7 @@ final class Bm25Index private (
     val n = docCount
     val avg = avgDl
     val tomb = tombstones // snapshot: one consistent view per batch
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
         // one k-slot heap per query, persistent ACROSS segments (a doc's
         // postings live entirely in its insertion segment, so per-segment
         // scoring is complete; later segments inherit the tightened
@@ -501,9 +500,8 @@ final class Bm25Index private (
             qi += 1
           }
         }
-        if (heaps.forall(_.size == 0)) Iterator.empty
-        else Iterator.single(Array.tabulate(nq)(qi => heaps(qi).toSortedArray))
-      }.collect()
+        Array.tabulate(nq)(qi => heaps(qi).toSortedArray)
+      }.filter(_.exists(_.nonEmpty))
   }
 
   /** The pre-r8 exhaustive OR evaluation — every posting of every query
@@ -700,8 +698,8 @@ final class Bm25Index private (
     require(kinds.sameElements(metaKinds),
       s"pinned metadata kinds mismatch: batch ${kinds.toSeq} != index ${metaKinds.toSeq}")
     val keyed = projected.rdd.map(keyRow(_, names, kinds)).partitionBy(part)
-    val newBlocks = blocks.zipPartitions(keyed, preservesPartitioning = true) {
-      (bit, rit) =>
+    val newBlocks = ServingCache.pin(
+      blocks.zipPartitions(keyed, preservesPartitioning = true) { (bit, rit) =>
         val patched = bit.map { b =>
           var dfs2: Array[Long] = null
           var i = 0
@@ -719,8 +717,7 @@ final class Bm25Index private (
         val seg = packRows(rit.toArray, names, kinds,
           (t, _) => ndB.value(t))
         patched ++ seg.iterator
-    }
-    newBlocks.persist(StorageLevel.MEMORY_ONLY)
+      })
     val bytes2 = blockBytes(newBlocks)
     new Bm25Index(newBlocks, docCount + bN, sumDl + bSumDl, names, metaKinds,
       bytes2, this.tombstones)
@@ -744,7 +741,7 @@ final class Bm25Index private (
     import Bm25Index._
     val names = metaNames
     val kinds = metaKinds
-    val nb = blocks.mapPartitions({ it =>
+    val nb = ServingCache.pin(blocks.mapPartitions({ it =>
       val segs = it.toArray
       if (segs.length <= 1) segs.iterator
       else {
@@ -764,8 +761,7 @@ final class Bm25Index private (
         }.toArray
         packRows(rows, names, kinds, (_, embedded) => embedded).iterator
       }
-    }, preservesPartitioning = true)
-    nb.persist(StorageLevel.MEMORY_ONLY)
+    }, preservesPartitioning = true))
     val bytes2 = Bm25Index.blockBytes(nb)
     new Bm25Index(nb, docCount, sumDl, names, metaKinds, bytes2, this.tombstones)
   }
@@ -1126,7 +1122,7 @@ object Bm25Index {
           packRows(rows, namesB, kindsB, (_, embedded) => embedded).iterator
         }
       }
-    blocks.persist(StorageLevel.MEMORY_ONLY)
+    ServingCache.pin(blocks)
     val bytes = blockBytes(blocks)
     val ix = new Bm25Index(blocks, nDocs, sumDl, names, kinds, bytes)
     // tombstones/ absent on foreign layouts: nothing pending by definition
@@ -1138,7 +1134,9 @@ object Bm25Index {
     ix
   }
 
-  /** Pinned-size accounting job (narrow scan of the cached segments). */
+  /** Pinned-size accounting job (narrow scan of the cached segments);
+    * the first job over fresh blocks, so it is the one that pins them.
+    */
   private def blockBytes(blocks: RDD[PostingBlock]): Long =
     blocks.map { b =>
       b.terms.iterator.map(t => 40L + 2L * t.length).sum +
@@ -1146,8 +1144,9 @@ object Bm25Index {
     }.fold(0L)(_ + _)
 
   /** Tokenize, count (term, doc) tf, attach each term's global df, shard
-    * BY DOCUMENT hash, pack each shard as one PostingBlock, pin
-    * MEMORY_ONLY. `shards` <= 0 means the session default parallelism.
+    * BY DOCUMENT hash, pack each shard as one PostingBlock, pin it
+    * ([[ServingCache.pin]]). `shards` <= 0 means the session default
+    * parallelism.
     * `metaCols` are pinned per DOC in each shard (sorted-doc parallel
     * [[MetaPredicate.Col]] arrays) for filtered serving — the per-user
     * KB shape (`private_knowledge_base.py:161`) on the lexical leg.
@@ -1219,7 +1218,7 @@ object Bm25Index {
     val blocks = keyed.mapPartitions { it =>
       packRows(it.toArray, names, kinds, (_, embedded) => embedded).iterator
     }
-    blocks.persist(StorageLevel.MEMORY_ONLY)
+    ServingCache.pin(blocks)
     val bytes = blockBytes(blocks) // materializes the pinned blocks
     toks.unpersist(false) // build-transient; blocks no longer depend on it
     new Bm25Index(blocks, nDocs, sumDl, names, kinds, bytes)

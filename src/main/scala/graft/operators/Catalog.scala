@@ -185,6 +185,21 @@ final case class Catalog(spark: SparkSession, root: String) {
     ()
   }
 
+  /** Drop the [[patchProbeHits]] memo entries of patch batch dirs a
+    * statement retires (`None`: every batch of the table). A retired dir
+    * is never looked up again, so its entry — and the broadcast it pins,
+    * up to the sidecar cap — would otherwise live as long as the process.
+    */
+  private def evictPatchProbes(table: String, batchDirs: Option[Seq[String]]): Unit = {
+    val app = spark.sparkContext.applicationId + ":"
+    batchDirs match {
+      case Some(ds) => ds.foreach(d => Catalog.patchProbeCache.remove(app + d))
+      case None => Catalog.patchProbeCache.keys
+        .filter(_.startsWith(app + patchesDir(table) + "/"))
+        .foreach(Catalog.patchProbeCache.remove)
+    }
+  }
+
   /** Last-writer-wins view over the append history. Deletion masks apply
     * BEFORE the window: a lightweight-deleted newest version must not win
     * — the surviving older version resurfaces, exactly what CH's FINAL
@@ -1495,6 +1510,7 @@ final case class Catalog(spark: SparkSession, root: String) {
         batches.foreach(fs.rmTree)
         invalidateProjections(table)
     }
+    evictPatchProbes(table, Some(batches))
   }
 
   /** Coalesce the deletion-mask sidecar: every lightweight delete
@@ -1886,6 +1902,7 @@ final case class Catalog(spark: SparkSession, root: String) {
         if (installed.isEmpty && fs.isDir(patchesDir(table)))
           fs.rmTree(patchesDir(table))
       }
+      evictPatchProbes(table, Some(batches.map(_._1)))
     }
     (adds.result(), removes.result())
   }
@@ -1989,6 +2006,7 @@ final case class Catalog(spark: SparkSession, root: String) {
         fs.rmTree(tmp)
         invalidateProjections(table)
     }
+    evictPatchProbes(table, None)
   }
 
   /** Partition-pruned mutation core: rewrite ONLY the leaf partition
@@ -2553,6 +2571,7 @@ final case class Catalog(spark: SparkSession, root: String) {
         fs.rmTree(patchesDir(table))
         invalidateProjections(table)
     }
+    evictPatchProbes(table, None)
   }
 
   /** ClickHouse `system.parts` analog: the physical parts (parquet
@@ -2706,7 +2725,8 @@ object Catalog {
     * (batch file listing at compute time, broadcast collected batch).
     * Same validity scheme as [[maskProbeCache]] (applicationId in the
     * key because the value is context-bound); size is O(outstanding
-    * patch batches), each bounded by the broadcast policy.
+    * patch batches), each bounded by the broadcast policy: the paths
+    * that retire batch dirs evict their keys ([[evictPatchProbes]]).
     */
   private[operators] val patchProbeCache =
     new scala.collection.concurrent.TrieMap[String,

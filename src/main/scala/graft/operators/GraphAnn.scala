@@ -82,7 +82,7 @@ final class GraphAnn private (
   def idsWhere(filter: SelfQueryFilter.Node): Array[Long] = {
     val tomb = tombstones
     val fOpt = Some(filter)
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
       it.flatMap { g =>
         require(g.meta.nonEmpty,
           "idsWhere needs metadata columns pinned at build (metaCols)")
@@ -90,8 +90,8 @@ final class GraphAnn private (
         (0 until g.ids.length).iterator.collect {
           case i if gate(i) => g.ids(i)
         }
-      }
-    }.collect().sorted
+      }.toArray
+    }.flatten.sorted
   }
 
   /** `DELETE WHERE` on the live graph tier: tombstone every node whose
@@ -174,13 +174,13 @@ final class GraphAnn private (
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
     val width = math.max(k, ef)
     val tomb = tombstones // one consistent snapshot for the whole batch
-    val perPart = blocks.mapPartitions { it =>
+    val perPart = ServingCache.serve(this, blocks) { it =>
       it.map { g =>
         val gate = GraphAnn.resultGate(g, filter, tomb)
         Array.tabulate(nq)(qi =>
           GraphAnn.searchOne(g, qs(qi), qnorms(qi), width, gate))
-      }
-    }.collect()
+      }.toArray
+    }.flatten
     val visited = perPart.iterator.flatMap(_.iterator.map(_._2)).sum
     val out = Array.tabulate(nq) { qi =>
       perPart.iterator.flatMap(_(qi)._1)
@@ -221,22 +221,21 @@ final class GraphAnn private (
       if (hit != null) return hit.doubleValue
     }
     val fOpt = Some(filter)
-    val counts = blocks.sparkContext.runJob(blocks,
-      (it: Iterator[GraphAnn.Graph]) => {
-        var pass = 0L
-        var total = 0L
-        it.foreach { g =>
-          val gate = GraphAnn.resultGate(g, fOpt, tomb)
-          val n = g.ids.length
-          var i = 0
-          while (i < n) {
-            if (gate == null || gate(i)) pass += 1
-            i += 1
-          }
-          total += n
+    val counts = ServingCache.serve(this, blocks, Some(Seq(0))) { it =>
+      var pass = 0L
+      var total = 0L
+      it.foreach { g =>
+        val gate = GraphAnn.resultGate(g, fOpt, tomb)
+        val n = g.ids.length
+        var i = 0
+        while (i < n) {
+          if (gate == null || gate(i)) pass += 1
+          i += 1
         }
-        (pass, total)
-      }, Seq(0))
+        total += n
+      }
+      (pass, total)
+    }
     val (p, t) = counts.head
     val sel = if (t == 0) 1.0 else p.toDouble / t
     selCache.synchronized { selCache.put(key, java.lang.Double.valueOf(sel)) }
@@ -257,7 +256,7 @@ final class GraphAnn private (
     val nq = qs.length
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
     val tomb = tombstones
-    val perPart = blocks.mapPartitions { it =>
+    val perPart = ServingCache.serve(this, blocks) { it =>
       it.map { g =>
         val gate = GraphAnn.resultGate(g, filter, tomb)
         // survivor index set ONCE per block, shared by the whole batch
@@ -272,8 +271,8 @@ final class GraphAnn private (
         (surv.length.toLong,
           Array.tabulate(nq)(qi =>
             GraphAnn.bruteOverSurvivors(g, surv, qs(qi), qnorms(qi), k)))
-      }
-    }.collect()
+      }.toArray
+    }.flatten
     val visited = perPart.iterator.map(_._1 * nq).sum
     val out = Array.tabulate(nq) { qi =>
       perPart.iterator.flatMap(_._2(qi))
@@ -353,9 +352,9 @@ object GraphAnn {
     g.ids.length.toLong * 8 + g.vecs.length.toLong * 4 +
       g.nbrs.iterator.map(n => 16L + n.length.toLong * 4).sum
 
-  /** Build per-partition NSW graphs and pin MEMORY_ONLY. `metaCols` pins
-    * metadata beside the nodes for filtered beam search (same canonical
-    * kinds and non-null contract as [[PackedScan.build]]).
+  /** Build per-partition NSW graphs and pin them ([[ServingCache.pin]]).
+    * `metaCols` pins metadata beside the nodes for filtered beam search
+    * (same canonical kinds and non-null contract as [[PackedScan.build]]).
     */
   def build(df: DataFrame, idCol: String, embCol: String,
       m: Int = 12, efC: Int = 64, metaCols: Seq[String] = Nil): GraphAnn = {
@@ -388,9 +387,9 @@ object GraphAnn {
     }
   }
 
-  /** Persist a block RDD and size it (rows + bytes in one job). */
+  /** Pin a block RDD and size it (rows + bytes in one job). */
   private[operators] def fromBlocks(blocks: RDD[Graph]): GraphAnn = {
-    blocks.persist(StorageLevel.MEMORY_ONLY)
+    ServingCache.pin(blocks)
     val (rows, bytes) = blocks
       .map(g => (g.ids.length.toLong, graphBytes(g)))
       .fold((0L, 0L)) { case ((r1, s1), (r2, s2)) => (r1 + r2, s1 + s2) }
@@ -728,9 +727,10 @@ object GraphAnn {
   *
   * Layout: clusters are hash-distributed across partitions
   * (`repartition(k, cluster_id)`), one Graph object per cluster, pinned
-  * MEMORY_ONLY — at 1000 executors each holds ~k/1000 cluster graphs and
-  * a query touches at most nprobe of them, so per-query work is O(nprobe
-  * × beam) regardless of corpus size.
+  * by [[ServingCache.pin]] — at 1000 executors each holds ~k/1000 cluster
+  * graphs, and a routed query runs tasks only on the partitions holding
+  * its probed clusters ([[IvfGraph.clusterParts]], recorded by the sizing
+  * job), so per-query work is O(nprobe × beam) regardless of corpus size.
   *
   * Exactness contract: nprobe = k (route everywhere) + ef ≥ the largest
   * cluster ⇒ every cluster graph is fully visited ⇒ equals the
@@ -746,7 +746,9 @@ final class IvfGraph private (
       * be empty (a per-graph check could miss it and silently build a
       * meta-less graph inside a meta-pinned index).
       */
-    private[operators] val hasMeta: Boolean) {
+    private[operators] val hasMeta: Boolean,
+    /** cluster id -> the partitions of `blocks` holding its graph. */
+    private[operators] val clusterParts: Map[Int, Seq[Int]]) {
 
   /** Sorted tombstoned EXTERNAL ids ([[PackedScan]]'s delete contract on
     * the routed structure; [[IvfGraph.remove]] is the compaction twin).
@@ -773,14 +775,14 @@ final class IvfGraph private (
       "idsWhere needs metadata columns pinned at build (metaCols)")
     val tomb = tombstones
     val fOpt = Some(filter)
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
       it.flatMap { case (_, g) =>
         val gate = GraphAnn.resultGate(g, fOpt, tomb)
         (0 until g.ids.length).iterator.collect {
           case i if gate(i) => g.ids(i)
         }
-      }
-    }.collect().sorted
+      }.toArray
+    }.flatten.sorted
   }
 
   /** `DELETE WHERE` on the routed structure: tombstone matching nodes. */
@@ -846,9 +848,11 @@ final class IvfGraph private (
     * touches only its own nprobe routed clusters — a cluster graph is
     * searched once per query that routed to it, so batch work is
     * sum(per-query routed work), with the per-job scheduling cost paid
-    * once for the whole batch (see [[PackedScan.topKBatch]]). With a
-    * `filter`, the AST binds once per cluster graph and the whole batch
-    * shares the gate; tombstoned ids are excluded the same way.
+    * once for the whole batch (see [[PackedScan.topKBatch]]). The job
+    * runs only on the partitions holding a probed cluster: the others
+    * would contribute nothing, so results equal an all-partitions run.
+    * With a `filter`, the AST binds once per cluster graph and the whole
+    * batch shares the gate; tombstoned ids are excluded the same way.
     */
   def topKBatch(qs: Array[Array[Float]], k: Int, nprobe: Int, ef: Int,
       filter: Option[SelfQueryFilter.Node] = None)
@@ -860,14 +864,16 @@ final class IvfGraph private (
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
     val width = math.max(k, ef)
     val tomb = tombstones // one consistent snapshot for the whole batch
-    val perPart = blocks.mapPartitions { it =>
+    val parts = probed.iterator.flatten.flatMap(clusterParts.getOrElse(_, Nil))
+      .toSeq.distinct.sorted
+    val perPart = ServingCache.serve(this, blocks, Some(parts)) { it =>
       it.flatMap { case (cid, g) =>
         lazy val gate = GraphAnn.resultGate(g, filter, tomb)
         (0 until nq).iterator.filter(qi => probed(qi).contains(cid)).map { qi =>
           (qi, GraphAnn.searchOne(g, qs(qi), qnorms(qi), width, gate))
         }
-      }
-    }.collect()
+      }.toArray
+    }.flatten
     val visited = perPart.iterator.map(_._2._2).sum
     val out = Array.tabulate(nq) { qi =>
       perPart.iterator.filter(_._1 == qi).flatMap(_._2._1)
@@ -905,22 +911,21 @@ final class IvfGraph private (
       if (hit != null) return hit.doubleValue
     }
     val fOpt = Some(filter)
-    val counts = blocks.sparkContext.runJob(blocks,
-      (it: Iterator[(Int, GraphAnn.Graph)]) => {
-        var pass = 0L
-        var total = 0L
-        it.foreach { case (_, g) =>
-          val gate = GraphAnn.resultGate(g, fOpt, tomb)
-          val n = g.ids.length
-          var i = 0
-          while (i < n) {
-            if (gate == null || gate(i)) pass += 1
-            i += 1
-          }
-          total += n
+    val counts = ServingCache.serve(this, blocks, Some(Seq(0))) { it =>
+      var pass = 0L
+      var total = 0L
+      it.foreach { case (_, g) =>
+        val gate = GraphAnn.resultGate(g, fOpt, tomb)
+        val n = g.ids.length
+        var i = 0
+        while (i < n) {
+          if (gate == null || gate(i)) pass += 1
+          i += 1
         }
-        (pass, total)
-      }, Seq(0))
+        total += n
+      }
+      (pass, total)
+    }
     val (p, t) = counts.head
     val sel = if (t == 0) 1.0 else p.toDouble / t
     selCache.synchronized { selCache.put(key, java.lang.Double.valueOf(sel)) }
@@ -941,7 +946,7 @@ final class IvfGraph private (
     val nq = qs.length
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
     val tomb = tombstones
-    val perPart = blocks.mapPartitions { it =>
+    val perPart = ServingCache.serve(this, blocks) { it =>
       it.map { case (_, g) =>
         val gate = GraphAnn.resultGate(g, filter, tomb)
         val sb = new scala.collection.mutable.ArrayBuilder.ofInt
@@ -955,8 +960,8 @@ final class IvfGraph private (
         (surv.length.toLong,
           Array.tabulate(nq)(qi =>
             GraphAnn.bruteOverSurvivors(g, surv, qs(qi), qnorms(qi), k)))
-      }
-    }.collect()
+      }.toArray
+    }.flatten
     val visited = perPart.iterator.map(_._1 * nq).sum
     val out = Array.tabulate(nq) { qi =>
       perPart.iterator.flatMap(_._2(qi))
@@ -1020,7 +1025,7 @@ object IvfGraph {
     * partitions via an explicit HashPartitioner (the partitioner is
     * RETAINED on the block RDD, so [[append]]'s cogroup is narrow on the
     * already-built side — only the small new batch shuffles), pinned
-    * MEMORY_ONLY.
+    * by [[ServingCache.pin]].
     */
   def build(indexed: DataFrame, model: AnnIndex.Model, idCol: String,
       embCol: String, m: Int = 12, efC: Int = 64,
@@ -1061,18 +1066,23 @@ object IvfGraph {
     }
   }
 
+  /** Pin a block RDD and size it in ONE job, which also records each
+    * cluster's partition — by scanning, since a loaded index has no
+    * partitioner to ask.
+    */
   private[operators] def fromBlocks(model: AnnIndex.Model,
       blocks: RDD[(Int, GraphAnn.Graph)]): IvfGraph = {
-    blocks.persist(StorageLevel.MEMORY_ONLY)
-    // rows + bytes + meta-pinned flag in the ONE materializing job
-    val (rows, bytes, meta) = blocks
-      .map { case (_, g) =>
-        (g.ids.length.toLong, GraphAnn.graphBytes(g), g.meta.nonEmpty)
-      }
-      .fold((0L, 0L, false)) { case ((r1, s1, m1), (r2, s2, m2)) =>
-        (r1 + r2, s1 + s2, m1 || m2)
-      }
-    new IvfGraph(model, blocks, rows, bytes, meta)
+    ServingCache.pin(blocks)
+    val perPart = blocks.sparkContext.runJob(blocks,
+      (it: Iterator[(Int, GraphAnn.Graph)]) => it.map { case (cid, g) =>
+        (cid, g.ids.length.toLong, GraphAnn.graphBytes(g), g.meta.nonEmpty)
+      }.toArray)
+    val graphs = perPart.flatten
+    val clusterParts = perPart.indices
+      .flatMap(p => perPart(p).map(_._1 -> p))
+      .groupMap(_._1)(_._2)
+    new IvfGraph(model, blocks, graphs.map(_._2).sum, graphs.map(_._3).sum,
+      graphs.exists(_._4), clusterParts)
   }
 
   /** DURABLE FORM — persist the built graphs so a new session (or a
@@ -1442,7 +1452,7 @@ object IvfGraph {
       found
     }
     // deterministic touched count: one pass over pinned ids (index-sized,
-    // not corpus-sized; the blocks are already MEMORY_ONLY)
+    // not corpus-sized; the blocks are already pinned)
     val touched = g.blocks.filter { case (_, gr) => hits(gr) }.count()
     val blocks = g.blocks.mapPartitions({ it =>
       it.flatMap { case (cid, gr) =>

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 import org.apache.spark.sql.graft.VectorKernels
 
@@ -20,8 +19,11 @@ import org.apache.spark.sql.graft.VectorKernels
   * 32 threads — KnnBench ceiling probe) but parquet re-decode and per-row
   * UnsafeRow materialization. This operator removes both: each partition
   * is pinned as ONE contiguous float[] (dim-strided) plus a long[] of
-  * ids, persisted MEMORY_ONLY as plain JVM arrays, and a query is one
-  * `runJob` that walks the block with [[VectorKernels.cosineStrided]]
+  * ids, pinned as plain JVM arrays without their source lineage
+  * ([[ServingCache.pin]]: spilled to disk under memory pressure, never
+  * recomputed from a source that may have changed since the build; a
+  * lost block fails the query and evicts the instance), and a query is
+  * one job that walks the block with [[VectorKernels.cosineStrided]]
   * into a bounded per-partition top-k, merged on the driver.
   *
   * This is the same structure a 1000-executor serving tier would hold:
@@ -54,8 +56,8 @@ import org.apache.spark.sql.graft.VectorKernels
   * same DuckDB SQL as q20.
   */
 final class PackedScan private (
-    blocks: RDD[PackedScan.Block], val dim: Int, val rows: Long,
-    val bytes: Long,
+    private[operators] val blocks: RDD[PackedScan.Block], val dim: Int,
+    val rows: Long, val bytes: Long,
     metaNames: Array[String], metaKinds: Array[Int],
     persisted: Seq[RDD[PackedScan.Block]]) {
 
@@ -85,7 +87,7 @@ final class PackedScan private (
     require(metaNames.nonEmpty,
       "idsWhere needs metadata columns pinned at build (metaCols)")
     val tomb = tombstones
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
       it.flatMap { b =>
         val pred = MetaPredicate.bind(filter, b.meta)
         (0 until b.ids.length).iterator.collect {
@@ -93,8 +95,8 @@ final class PackedScan private (
             (tomb.isEmpty ||
               java.util.Arrays.binarySearch(tomb, b.ids(i)) < 0) => b.ids(i)
         }
-      }
-    }.collect().sorted
+      }.toArray
+    }.flatten.sorted
   }
 
   /** `DELETE WHERE` on the live scan tier (tombstones; [[compact]] is
@@ -183,7 +185,7 @@ final class PackedScan private (
     if (qs.isEmpty || k <= 0) return Array.empty
     val nq = qs.length
     val qnorms = qs.map(q => math.sqrt(VectorKernels.norm2(q)))
-    blocks.mapPartitions { it =>
+    ServingCache.serve(this, blocks) { it =>
       // bounded insertion top-k per (partition, query): k is tiny (10ish),
       // so the branch-predictable insertion beats a heap. Slots past
       // found(qi) are empty, so a NaN distance (zero-norm row or query)
@@ -224,9 +226,9 @@ final class PackedScan private (
           r += 1
         }
       }
-      Iterator.single(Array.tabulate(nq)(qi =>
-        Array.tabulate(found(qi))(i => (bestId(qi)(i), bestD(qi)(i)))))
-    }.collect()
+      Array.tabulate(nq)(qi =>
+        Array.tabulate(found(qi))(i => (bestId(qi)(i), bestD(qi)(i))))
+    }
   }
 
   /** Top-k as a DataFrame (vec_id, dist) for plan composition / gating. */
@@ -253,8 +255,8 @@ final class PackedScan private (
     * eviction.
     */
   def insert(batch: DataFrame, idCol: String, embCol: String): PackedScan = {
-    val nb = PackedScan.packSource(batch, idCol, embCol, metaNames, metaKinds)
-    nb.persist(StorageLevel.MEMORY_ONLY)
+    val nb = ServingCache.pin(
+      PackedScan.packSource(batch, idCol, embCol, metaNames, metaKinds))
     val (bRows, bBytes) = nb
       .map(b => (b.ids.length.toLong, PackedScan.blockBytes(b)))
       .fold((0L, 0L)) { case ((r1, s1), (r2, s2)) => (r1 + r2, s1 + s2) }
@@ -287,7 +289,7 @@ final class PackedScan private (
     val tomb = tombstones
     val names = metaNames
     val kinds = metaKinds
-    val nb = blocks.mapPartitions({ it =>
+    val nb = ServingCache.pin(blocks.mapPartitions({ it =>
       val rows = it.flatMap { b =>
         Iterator.tabulate(b.ids.length) { i =>
           val v = new Array[Float](b.dim)
@@ -301,8 +303,7 @@ final class PackedScan private (
         tomb.isEmpty || java.util.Arrays.binarySearch(tomb, id) < 0
       }
       PackedScan.packPartition(rows, names, kinds)
-    }, preservesPartitioning = true)
-    nb.persist(StorageLevel.MEMORY_ONLY)
+    }, preservesPartitioning = true))
     val (cRows, cBytes) = nb
       .map(b => (b.ids.length.toLong, PackedScan.blockBytes(b)))
       .fold((0L, 0L)) { case ((r1, s1), (r2, s2)) => (r1 + r2, s1 + s2) }
@@ -425,10 +426,11 @@ object PackedScan {
   private def kindOf(t: DataType, name: String): Int =
     MetaPredicate.kindOf(t, name)
 
-  /** Pack (one pass over the source) and pin MEMORY_ONLY. `metaCols`
-    * are pinned as typed primitive arrays for [[MetaPredicate]] filtering;
-    * integral → Long, floating → Double, plus String and Boolean. Pinned
-    * metadata must be non-null (see [[MetaPredicate]] null contract).
+  /** Pack (one pass over the source) and pin ([[ServingCache.pin]]).
+    * `metaCols` are pinned as typed primitive arrays for [[MetaPredicate]]
+    * filtering; integral → Long, floating → Double, plus String and
+    * Boolean. Pinned metadata must be non-null (see [[MetaPredicate]] null
+    * contract).
     */
   def build(df: DataFrame, idCol: String, embCol: String,
       metaCols: Seq[String] = Nil): PackedScan = {
@@ -521,7 +523,7 @@ object PackedScan {
 
   private def fromBlocks(blocks: RDD[Block], names: Array[String],
       kinds: Array[Int]): PackedScan = {
-    blocks.persist(StorageLevel.MEMORY_ONLY)
+    ServingCache.pin(blocks)
     // rows + pinned bytes in ONE materializing job (ids: 8 B, floats: 4 B)
     val (rows, bytes) = blocks
       .map(b => (b.ids.length.toLong, blockBytes(b)))

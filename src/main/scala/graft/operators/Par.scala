@@ -40,22 +40,25 @@ object Par {
     * writes at ~950 ms serial wall. Threads inherit the caller's
     * Spark local properties (job group/description are
     * InheritableThreadLocal). All work is awaited; the FIRST failure
-    * rethrows after every thread finished, so a caller's abort
-    * semantics (e.g. EpochStore's uncommitted-epoch cleanup) see no
-    * half-running stragglers.
+    * rethrows after every thread finished, with every other thunk's
+    * failure attached as suppressed, so a caller's abort semantics
+    * (e.g. EpochStore's uncommitted-epoch cleanup) see no half-running
+    * stragglers and no failure goes unreported.
     */
   def jobs(work: (() => Unit)*): Unit =
     if (work.length <= 1) work.foreach(_())
     else {
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
       val threads = work.map { w =>
         new Thread(() =>
-          try w() catch {
-            case t: Throwable => failure.compareAndSet(null, t)
-          })
+          try w() catch { case t: Throwable => failures.add(t) })
       }
       threads.foreach(_.start())
       threads.foreach(_.join())
-      if (failure.get() != null) throw failure.get()
+      val first = failures.poll()
+      if (first != null) {
+        failures.forEach(t => if (t ne first) first.addSuppressed(t))
+        throw first
+      }
     }
 }

@@ -1,5 +1,10 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+
 /** BOUNDED LRU registry for session-lifetime serving structures — the
   * memory governor for everything this engine pins executor-side between
   * queries: [[PackedScan]] packed blocks, [[GraphAnn]]/[[IvfGraph]] graph
@@ -21,13 +26,67 @@ package graft.operators
   * arrays, approximate for cached DataFrames — order-of-magnitude is what
   * the budget needs). Eviction calls the structure's evict thunk
   * (`RDD.unpersist` / `DataFrame.unpersist`) and drops the memo entry, so
-  * the next `getOrBuild` rebuilds from source — correctness never depends
-  * on residency, only latency does.
+  * the next `getOrBuild` rebuilds from source.
+  *
+  * RESIDENCY CONTRACT of the block structures ([[PackedScan]],
+  * [[Bm25Index]], [[GraphAnn]], [[IvfGraph]]): their blocks are pinned by
+  * [[pin]], without the lineage back to the source they were built from.
+  * A block is never silently recomputed — a recompute would read the
+  * source as it is NOW and could mix snapshots (Bm25's build-time
+  * N/sumDl against recomputed postings). Instead:
+  *   - memory pressure spills pinned blocks to disk, it does not drop them;
+  *   - a block lost with its executor, or unpersisted under a live query,
+  *     makes that serving call fail loudly ([[serve]]), and the failing
+  *     call evicts the instance (matched by identity), so the next
+  *     `getOrBuild` rebuilds it from the source of truth.
+  * An instance that answers, answers from exactly what it built; one that
+  * lost data answers nothing.
   *
   * Budget default 16 GiB (local[32] has 128 GiB; a real cluster sets
   * `GRAFT_SERVING_CACHE_BYTES` to a fraction of executor storage memory).
   */
 object ServingCache {
+
+  /** Pin a serving structure's block RDD without its source lineage
+    * (`localCheckpoint`, storage MEMORY_AND_DISK): the first job over
+    * `blocks` stores every partition and cuts the lineage to the stored
+    * blocks, so a query task ships only the block RDD, and the structure
+    * stops holding its source plan (FileScanRDD, SQL closures, generated
+    * code). Callers materialize right away with their sizing job.
+    */
+  def pin[T](blocks: RDD[T]): RDD[T] = blocks.localCheckpoint()
+
+  /** One serving job over the [[pin]]ned `blocks` of `owner`: `f` runs
+    * on each listed partition (all by default), results in partition
+    * order. `f` ships inside a plain class, not a lambda: for a lambda,
+    * SparkContext's closure cleaner re-parses the bytecode of the class
+    * that declared it (for `collect`, all of RDD) on every job; for a
+    * plain class it returns at once.
+    *
+    * A lost block fails the job — nothing can recompute it; that failure
+    * evicts `owner` by identity and rethrows, so the caller sees the loss
+    * and the next `getOrBuild` rebuilds.
+    */
+  def serve[T, U: ClassTag](owner: AnyRef, blocks: RDD[T],
+      parts: Option[Seq[Int]] = None)(f: Iterator[T] => U): Array[U] =
+    try blocks.sparkContext.runJob(blocks, new PartitionFn(f),
+      parts.getOrElse(blocks.partitions.indices))
+    catch {
+      case e: Throwable if lostBlock(e) =>
+        evictValue(owner)
+        throw new IllegalStateException(
+          s"pinned blocks of a ${owner.getClass.getSimpleName} were lost; " +
+            "the instance is evicted from ServingCache and must be rebuilt", e)
+    }
+
+  private final class PartitionFn[T, U](f: Iterator[T] => U)
+      extends ((TaskContext, Iterator[T]) => U) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[T]): U = f(it)
+  }
+
+  private def lostBlock(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
 
   private final class Entry(val bytes: Long, val value: AnyRef,
       val evictFn: () => Unit)
@@ -156,6 +215,15 @@ object ServingCache {
   def evict(key: String): Unit = synchronized {
     val e = lru.remove(key)
     if (e != null) { try e.evictFn() catch { case _: Throwable => } }
+  }
+
+  /** Evict every entry holding `v` (identity; no-op if none). */
+  private def evictValue(v: AnyRef): Unit = synchronized {
+    val it = lru.values.iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.value eq v) { it.remove(); try e.evictFn() catch { case _: Throwable => } }
+    }
   }
 
   /** Unpin everything — the between-batteries reset the bench uses so

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{ConcurrentCommitException, EpochStore, FsOps, Manifest}
+import graft.operators.{ConcurrentCommitException, EpochStore, FsOps, Manifest, Par}
 
 /** The cross-process writer-concurrency contract (r16 verdict item 2).
   * Mutations within one process are driver-serialized; across
@@ -347,5 +347,14 @@ class ConcurrencySpec extends AnyFunSuite {
     val after = Catalog(spark, root).readRaw("t")
     assert(after.filter(col("n") < 10).count() == 0)
     assert(treeRels() == committedRels())
+  }
+
+  test("Par.jobs: every failure surfaces, the rest suppressed on the first") {
+    val a = new RuntimeException("a")
+    val b = new IllegalStateException("b")
+    var ran = false
+    val ex = intercept[Throwable](Par.jobs(() => throw a, () => throw b, () => ran = true))
+    assert(ran)
+    assert((ex +: ex.getSuppressed.toSeq).toSet == Set[Throwable](a, b))
   }
 }

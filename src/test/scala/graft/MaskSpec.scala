@@ -351,6 +351,36 @@ class MaskSpec extends AnyFunSuite {
     assert(late == "late" && batches() == 2)
   }
 
+  test("retiring patch batches drops their probe memo entries") {
+    import graft.operators.TestAccess
+    val cat = freshCat("foldmemo")
+    cat.create("t", docs(2000).repartition(3, col("lang")), Seq("lang"))
+    val tpath = s"${cat.root}/t"
+    // committed batch dirs: the ones still holding parquet files
+    def live(): Set[String] = {
+      val d = Paths.get(tpath, "_patches")
+      if (!Files.isDirectory(d)) Set.empty
+      else Files.list(d).iterator().asScala.filter(b =>
+        b.getFileName.toString.startsWith("seq=") &&
+          Files.list(b).iterator().asScala.exists(_.toString.endsWith(".parquet")))
+        .map(_.getFileName.toString).toSet
+    }
+    def memoized(): Set[String] = { cat.readRaw("t"); TestAccess.patchProbeBatches(tpath) }
+    (1 to 4).foreach(i =>
+      cat.updateWhereLight("t", col("id") % 5 === i, Map("n" -> (col("n") + i))))
+    assert(live().size == 4 && memoized() == live())
+    cat.compactPatches("t") // K -> 1
+    assert(live().size == 1 && memoized() == live())
+    cat.updateWhereLight("t", col("id") % 7 === 0, Map("n" -> lit(-1L)))
+    assert(live().size == 2 && memoized() == live())
+    // a partition-pruned heavy mutation rewrites every batch (foldSidecars)
+    cat.deleteWhere("t", col("lang") === "l0")
+    assert(live().size == 2 && TestAccess.patchProbeBatches(tpath).subsetOf(live()))
+    assert(memoized() == live())
+    cat.killMutations("t")
+    assert(live().isEmpty && TestAccess.patchProbeBatches(tpath).isEmpty)
+  }
+
   test("patch probe: join-free within policy, bit-identical to the join path") {
     val cat = freshCat("pprobe1")
     val base = spark.range(3000).select(

@@ -8,6 +8,8 @@ import org.apache.spark.rdd.RDD
   */
 object TestAccess {
   def blocks(g: IvfGraph): RDD[(Int, GraphAnn.Graph)] = g.blocks
+  def blocks(g: GraphAnn): RDD[GraphAnn.Graph] = g.blocks
+  def blocks(ps: PackedScan): RDD[PackedScan.Block] = ps.blocks
   def model(g: IvfGraph): AnnIndex.Model = g.model
   def packAndBuild(rows: Array[(Long, Array[Float])], m: Int,
       efC: Int): GraphAnn.Graph = GraphAnn.packAndBuild(rows, m, efC)
@@ -37,4 +39,10 @@ object TestAccess {
       _.asInstanceOf[(AnyRef,
         org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])]
         ._2.value)
+
+  /** `seq=N` batch dirs of `tablePath` holding a patch-probe memo entry. */
+  def patchProbeBatches(tablePath: String): Set[String] =
+    Catalog.patchProbeCache.keys.collect {
+      case k if k.contains(tablePath + "/_patches/") => k.substring(k.lastIndexOf('/') + 1)
+    }.toSet
 }
