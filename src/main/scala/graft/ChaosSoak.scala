@@ -82,7 +82,6 @@ object ChaosSoak {
     override def move(src: String, dst: String): Unit = {
       spend(src, dst); super.move(src, dst)
     }
-    // replaceDir spends through its own rmTree + move (virtual dispatch)
     override def copyTree(src: String, dst: String): Unit = {
       spend(src, dst); super.copyTree(src, dst)
     }

@@ -25,6 +25,18 @@ import org.apache.spark.sql.functions._
   * (`PARTITION BY session_id` analog, `tools.py:74-78`) so per-key reads
   * and deletes prune partitions instead of scanning the table.
   *
+  * THE MANIFEST IS THE TABLE. MyScale's own metadata names each table's
+  * live parts; here the `_manifest` log ([[Manifest]]) does, and it is
+  * the only source of a table's state: reads serve exactly the files
+  * the latest snapshot names, and every mutation commits its change as
+  * one snapshot (Delta Lake's log-is-the-truth design, Armbrust et al.,
+  * VLDB 2020). [[create]] commits the first snapshot; a directory
+  * without `_manifest` (written around the API) is adopted once, on its
+  * first read or mutation, by committing its tree as that snapshot.
+  * Files in the tree that no snapshot names — crash orphans, a peer's
+  * uncommitted output — do not exist for readers; [[refreshManifest]]
+  * is the hatch for writers outside this API.
+  *
   * Every directory-level operation routes through [[FsOps]] (the Hadoop
   * `FileSystem` binding): on this sandbox that resolves to the local
   * filesystem, on a cluster the same calls resolve to the object-store
@@ -90,9 +102,8 @@ final case class Catalog(spark: SparkSession, root: String) {
     evictSidecarMemos(table)
     invalidateProjections(table)
     // overwrite wiped the dir (any prior manifest, orphans and all), so
-    // the fresh tree IS the exact live set — the one place a full
-    // relist-adopt is always sound
-    if (manifestEnabled) commitManifest(table, 0, treeEntries(table), Nil)
+    // the fresh tree IS the exact live set
+    commitTree(table)
   }
 
   /** Remove the table: its data tree and every memo keyed by its path. */
@@ -110,33 +121,30 @@ final case class Catalog(spark: SparkSession, root: String) {
     */
   def append(table: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): Unit = {
-    val m = beginMutation(table)
+    val prev = beginMutation(table)
     val parts = if (partitionBy.nonEmpty) partitionBy else partitionColsOf(table)
     // the committed delta is a before/after tree diff: exactly the
     // files THIS job wrote, never a crash orphan (orphans sit in the
     // `before` set too). Two tree LISTs per append — the write side
     // pays O(files) so the read side stays O(1); mutations are the
     // rare direction.
-    val before = if (m.isDefined)
-      fs.listFiles(path(table)).map(_._1).toSet else Set.empty[String]
+    val before = fs.listFiles(path(table)).map(_._1).toSet
     val w = df.write.mode("append").options(opts(table))
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path(table))
     invalidateProjections(table)
-    m match {
-      case Some(prev) =>
-        val added = fs.listFiles(path(table))
-          .filterNot { case (p, _, _) => before.contains(p) }
-          .flatMap { case (p, len, mt) =>
-            fs.relativeTo(path(table), p)
-              .filter(fs.isDataRel)
-              .map(Manifest.Entry(_, len, mt))
-          }
-        commitManifest(table, prev.seq, prev.entries ++ added, Nil)
-      case None =>
-        // append-as-create: the dir did not exist when beginMutation
-        // probed, so the fresh tree is exactly this job's output
-        if (manifestEnabled && fs.isDir(path(table)))
-          commitManifest(table, 0, treeEntries(table), Nil)
+    if (prev.seq == 0L)
+      // append-as-create: there was no directory, so the fresh tree is
+      // exactly this job's output
+      commitTree(table)
+    else {
+      val added = fs.listFiles(path(table))
+        .filterNot { case (p, _, _) => before.contains(p) }
+        .flatMap { case (p, len, mt) =>
+          fs.relativeTo(path(table), p)
+            .filter(fs.isDataRel)
+            .map(Manifest.Entry(_, len, mt))
+        }
+      commitManifest(table, prev.seq, prev.entries ++ added, Nil)
     }
   }
 
@@ -214,57 +222,48 @@ final case class Catalog(spark: SparkSession, root: String) {
       .drop("__rn")
   }
 
-  def readRaw(table: String): DataFrame =
-    loadManifest(table) match {
-      case Some(m) =>
-        // manifest-authoritative construction: one LIST of the small
-        // `_manifest` dir (the freshness check) + a frame-cache hit.
-        // Building the DataFrame is O(files) DRIVER CPU (FileStatus +
-        // plan construction, ~9 µs/file in ManifestSoak — no FS I/O),
-        // so the built frame is memoized per manifest EPOCH: the
-        // serving shape reads one net state many times, and a logical
-        // plan is immutable. The key carries everything that shapes
-        // the plan — snapshot identity, the broadcast-policy knobs
-        // (MaskSpec toggles them between reads and must see the plan
-        // change), and the owning session.
-        val (thr, cap) = sidecarThresholds
-        val maxE = spark.conf.get("spark.graft.maskProbeMaxEntries",
-          Catalog.DefaultMaskProbeMaxEntries.toString).trim
-        val key = (Catalog.sessionKey(spark), path(table))
-        Catalog.readFrameCache.get(key) match {
-          case Some((sn, sl, t0, c0, e0, df))
-            if sn == m.snapName && sl == m.snapLen && t0 == thr &&
-              c0 == cap && e0 == maxE => df
-          case _ =>
-            val s = snapFrom(m, table)
-            val df =
-              if (s.maskParquet.isEmpty && s.batches.isEmpty) {
-                if (s.data.isEmpty)
-                  throw Catalog.manifestedEmpty(table)
-                else org.apache.spark.sql.graft.PreListedScan
-                  .parquet(spark, fs.qualify(path(table)), s.data)
-              } else readSplit(table, s)
-            Catalog.readFrameCache.put(key,
-              (m.snapName, m.snapLen, thr, cap, maxE, df))
-            df
-        }
-      case None =>
-        // legacy (never-manifested) table — the listing path, unchanged.
-        // Sidecar-free fast path: referencing `_metadata` forces the
-        // scan to materialize row indices even after a drop (Catalyst
-        // keeps the generated columns), so clean tables — the
-        // overwhelmingly common case — must never pay it (MaskSpec pins
-        // the plan). The probe is two directory stats, NOT a listing: a
-        // clean table's construction must stay O(1) driver-side.
-        if (!fs.isDir(deletesDir(table)) && !fs.isDir(patchesDir(table)))
-          spark.read.parquet(path(table))
-        else {
-          val s = snapFromListing(table)
-          if (s.maskParquet.isEmpty && s.batches.isEmpty)
-            spark.read.parquet(path(table))
+  def readRaw(table: String): DataFrame = {
+    // manifest-authoritative construction: one LIST of the small
+    // `_manifest` dir (the freshness check) + a frame-cache hit.
+    // Building the DataFrame is O(files) DRIVER CPU (FileStatus +
+    // plan construction — no FS I/O, ManifestSpec counts the calls),
+    // so the built frame is memoized per manifest EPOCH: the
+    // serving shape reads one net state many times, and a logical
+    // plan is immutable. The key carries everything that shapes
+    // the plan — snapshot identity, the broadcast-policy knobs
+    // (MaskSpec toggles them between reads and must see the plan
+    // change), and the owning session.
+    val m = stateOf(table)
+    val (thr, cap) = sidecarThresholds
+    val maxE = spark.conf.get("spark.graft.maskProbeMaxEntries",
+      Catalog.DefaultMaskProbeMaxEntries.toString).trim
+    val key = (Catalog.sessionKey(spark), path(table))
+    Catalog.readFrameCache.get(key) match {
+      case Some((sn, sl, t0, c0, e0, df))
+        if sn == m.snapName && sl == m.snapLen && t0 == thr &&
+          c0 == cap && e0 == maxE => df
+      case _ =>
+        val s = snapFrom(m, table)
+        val df =
+          if (s.maskParquet.isEmpty && s.batches.isEmpty) scanOf(table, s)
           else readSplit(table, s)
-        }
+        Catalog.readFrameCache.put(key,
+          (m.snapName, m.snapLen, thr, cap, maxE, df))
+        df
     }
+  }
+
+  /** The plain scan of a snap's data files. A snap with none fails
+    * loud: the error Spark raises for a missing path when the table
+    * has no directory, else [[Catalog.manifestedEmpty]].
+    */
+  private def scanOf(table: String, s: Snap): DataFrame =
+    if (s.data.nonEmpty)
+      org.apache.spark.sql.graft.PreListedScan
+        .parquet(spark, fs.qualify(path(table)), s.data)
+    else if (fs.isDir(path(table))) throw Catalog.manifestedEmpty(table)
+    else throw org.apache.spark.sql.graft.Bridge
+      .pathNotFound(fs.qualify(path(table)))
 
   /** One recursive listing of the table tree, partitioned into what a
     * read construction consumes. Construction used to re-list the
@@ -284,19 +283,15 @@ final case class Catalog(spark: SparkSession, root: String) {
   private final case class Snap(
       data: Seq[(String, Long, Long)],
       mask: Seq[(String, Long, Long)],
-      batches: Seq[(String, Seq[(String, Long, Long)])],
-      viaManifest: Boolean = false) {
+      batches: Seq[(String, Seq[(String, Long, Long)])]) {
     def maskParquet: Seq[(String, Long, Long)] =
       mask.filter(_._1.endsWith(".parquet"))
   }
 
-  /** The construction listing, from the manifest when the table has one
-    * (O(1): no tree I/O — the entries were stat'ed at commit time),
-    * else from one recursive LIST of the tree.
+  /** The construction listing, from the manifest (O(1): no tree I/O —
+    * the entries were stat'ed at commit time).
     */
-  private def snapOf(table: String): Snap =
-    loadManifest(table).map(snapFrom(_, table))
-      .getOrElse(snapFromListing(table))
+  private def snapOf(table: String): Snap = snapFrom(stateOf(table), table)
 
   /** [[Snap]] reconstructed from a manifest state: same partitioning
     * rule as the listing version, absolute URIs rebuilt against the
@@ -326,8 +321,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     Snap(data.result(), mask.result(),
       batches.toSeq.map { case (n, b) =>
         (s"${patchesDir(table)}/seq=$n", b.result())
-      },
-      viaManifest = true)
+      })
   }
 
   private def snapFromListing(table: String): Snap = {
@@ -351,9 +345,8 @@ final case class Catalog(spark: SparkSession, root: String) {
       else if (segs.head == "_patches" && segs.length >= 2 &&
           segs(1).startsWith("seq=")) {
         // same fail mode as patchBatches' `.toLong`: a malformed batch
-        // dir is on-disk corruption, and silently serving rows WITHOUT
-        // its patches (while the legacy path fails loud) would make the
-        // two read paths disagree on identical state (r14 ADVICE)
+        // dir is on-disk corruption, and adopting a tree WITHOUT its
+        // patches would silently serve pre-update rows (r14 ADVICE)
         val n = segs(1).stripPrefix("seq=").toLongOption.getOrElse(
           throw new IllegalStateException(
             s"snap: malformed patch batch dir '${segs(1)}' under " +
@@ -370,17 +363,12 @@ final case class Catalog(spark: SparkSession, root: String) {
 
   // ---- manifest (log-structured listing; see graft.operators.Manifest) --
 
-  private def manifestEnabled: Boolean =
-    spark.conf.get("spark.graft.manifestEnabled", "true").trim
-      .equalsIgnoreCase("true")
-
-  /** Latest manifest state of `table`, memoized on the snapshot file's
-    * own (name, len) — the lookup costs ONE listing of the small
-    * `_manifest` dir (that listing IS the cross-process freshness
-    * check), the parse only runs when the snapshot changed. None =
-    * never-manifested table (the legacy listing path); a present but
-    * unreadable snapshot throws (see [[Manifest]]'s authority
-    * contract).
+  /** Latest committed manifest state of `table`, memoized on the
+    * snapshot file's own (name, len) — the lookup costs ONE listing of
+    * the small `_manifest` dir (that listing IS the cross-process
+    * freshness check), the parse only runs when the snapshot changed.
+    * None = nothing committed yet; a present but unreadable snapshot
+    * throws (see [[Manifest]]'s authority contract).
     */
   private def loadManifest(table: String): Option[Manifest.State] = {
     val key = path(table)
@@ -400,6 +388,23 @@ final case class Catalog(spark: SparkSession, root: String) {
     }
   }
 
+  /** The state every read and mutation works from. A directory without
+    * `_manifest` is adopted on first touch: its tree becomes the first
+    * snapshot, the same commit [[create]] makes (a racer that loses the
+    * adoption CAS reloads the winner's snapshot and goes on). A table
+    * with no directory has the empty state at seq 0, and nothing is
+    * written for it: [[append]] creates it, reads fail as on a missing
+    * path.
+    */
+  private def stateOf(table: String): Manifest.State =
+    loadManifest(table).getOrElse {
+      if (!fs.isDir(path(table))) Catalog.Absent
+      else try commitManifest(table, 0, treeEntries(table), Nil)
+      catch {
+        case e: ConcurrentCommitException => loadManifest(table).getOrElse(throw e)
+      }
+    }
+
   private def commitManifest(table: String, prevSeq: Long,
       entries: Seq[Manifest.Entry], remove: Seq[String]): Manifest.State = {
     val st = Manifest.commit(fs, path(table), prevSeq, entries, remove)
@@ -407,11 +412,22 @@ final case class Catalog(spark: SparkSession, root: String) {
     st
   }
 
-  /** Every live file of the tree as manifest entries — the FIRST
-    * snapshot of a legacy table (whose tree is listing-consistent by
-    * construction, so adopting it is exact) and the body of
-    * [[refreshManifest]]. Shares [[snapFromListing]], so malformed
-    * sidecar state fails loud here too.
+  /** Commit the whole tree as the live set, past the latest committed
+    * sequence: the fresh tree of [[create]] or of an append that created
+    * the table (superseding any adoption a concurrent reader made of it
+    * mid-write), and the [[refreshManifest]] hatch.
+    */
+  private def commitTree(table: String): Unit = {
+    val prevSeq = Manifest.latestMeta(fs, path(table))
+      .map(nm => Manifest.seqOfName(nm._1)).getOrElse(0L)
+    commitManifest(table, prevSeq, treeEntries(table), Nil)
+    ()
+  }
+
+  /** Every live file of the tree as manifest entries — the adoption
+    * snapshot of a directory without `_manifest` and the body of
+    * [[commitTree]]. Shares [[snapFromListing]], so malformed sidecar
+    * state fails loud here too.
     */
   private def treeEntries(table: String): Seq[Manifest.Entry] = {
     val s = snapFromListing(table)
@@ -421,24 +437,6 @@ final case class Catalog(spark: SparkSession, root: String) {
     }
   }
 
-  /** Mutation preamble, called by every public mutator before it reads
-    * or writes the tree:
-    *
-    *   1. finish an interrupted commit's cleanup (`remove`-pending
-    *      files — the crash window between a flip and its cleanup);
-    *   2. sweep UNCOMMITTED sidecar files (two small LISTs, the
-    *      sidecar dirs are O(mutated rows) by design): the sidecar
-    *      rewrite paths re-list those dirs scoped, and a crashed
-    *      statement's uncommitted mask/patch files must not get
-    *      adopted as if the statement had committed;
-    *   3. establish the first snapshot when the table has none and
-    *      manifests are enabled.
-    *
-    * Returns the tracking state (None = manifests disabled and table
-    * never manifested — every mutator then keeps its legacy shape).
-    * Read paths never call this: reads are manifest-served and correct
-    * against any crash state without writing anything.
-    */
   /** The concurrent-writer grace window (class doc): 0 = single-writer
     * eager hygiene (every uncommitted sidecar file is crash debris the
     * moment a mutator enters); > 0 = concurrent deployments, where age
@@ -448,49 +446,61 @@ final case class Catalog(spark: SparkSession, root: String) {
   private def sidecarSweepGraceMs: Long = spark.conf
     .get("spark.graft.sidecarSweepGraceMs", "0").trim.toLong
 
-  private def beginMutation(table: String): Option[Manifest.State] = {
-    loadManifest(table) match {
-      case Some(m) =>
-        if (m.remove.nonEmpty) {
-          m.remove.foreach(destroyRel(table, _))
-          commitManifest(table, m.seq, m.entries, Nil)
-        }
-        val known = m.entries.map(_.rel).toSet
-        // CONCURRENT-WRITER GRACE (Delta's vacuum-retention posture, a
-        // public design): with a second writer live on this table, an
-        // uncommitted sidecar file may be an IN-FLIGHT statement's —
-        // indistinguishable from a crashed one by anything but age.
-        // Sweeping it would let the victim seal a manifest naming a
-        // missing file (reads fail loud; the refreshManifest heal then
-        // silently drops the statement — a lost update). Deployments
-        // running concurrent writers on one table set the grace above
-        // their max statement duration; the 0 default keeps the
-        // single-writer-per-table eager hygiene exactly as before.
-        // Folds and reads never adopt young debris either way — both
-        // consume the COMMITTED sidecar set ([[snapOf]]), never a disk
-        // listing, on manifested tables.
-        val graceMs = sidecarSweepGraceMs
-        val now = System.currentTimeMillis()
-        Seq(deletesDir(table), patchesDir(table)).foreach { d =>
-          fs.listFiles(d).foreach { case (p, _, mt) =>
-            fs.relativeTo(path(table), p).foreach { rel =>
-              // ANY uncommitted file goes, not just parquet: the
-              // sidecar dirs are wholly protocol-owned (committed
-              // state lists every file, `_SUCCESS` included), and a
-              // parquet-only sweep left a crashed fold's batch dir as
-              // a `_SUCCESS`-only husk that the disk-level
-              // patchBatches listing then fed to spark.read as an
-              // unreadable empty batch (found by the ChaosSoak sweep)
-              if (!known.contains(rel) && now - mt >= graceMs)
-                destroyRel(table, rel)
-            }
-          }
-        }
-        loadManifest(table)
-      case None if manifestEnabled && fs.isDir(path(table)) =>
-        Some(commitManifest(table, 0, treeEntries(table), Nil))
-      case None => None
+  /** Mutation preamble, called by every public mutator before it reads
+    * or writes the tree; returns the state the mutation commits against
+    * ([[stateOf]] — adopting a directory on first touch, the empty
+    * state for a table with no directory):
+    *
+    *   1. finish an interrupted commit's cleanup (`remove`-pending
+    *      files — the crash window between a flip and its cleanup);
+    *   2. sweep UNCOMMITTED sidecar files (two small LISTs, the
+    *      sidecar dirs are O(mutated rows) by design): the sidecar
+    *      rewrite paths re-list those dirs scoped, and a crashed
+    *      statement's uncommitted mask/patch files must not get
+    *      adopted as if the statement had committed.
+    *
+    * Read paths never call this: reads are manifest-served and correct
+    * against any crash state without writing anything beyond the
+    * first-touch adoption.
+    */
+  private def beginMutation(table: String): Manifest.State = {
+    val m = stateOf(table)
+    if (m.remove.nonEmpty) {
+      m.remove.foreach(destroyRel(table, _))
+      commitManifest(table, m.seq, m.entries, Nil)
     }
+    val known = m.entries.map(_.rel).toSet
+    // CONCURRENT-WRITER GRACE (Delta's vacuum-retention posture, a
+    // public design): with a second writer live on this table, an
+    // uncommitted sidecar file may be an IN-FLIGHT statement's —
+    // indistinguishable from a crashed one by anything but age.
+    // Sweeping it would let the victim seal a manifest naming a
+    // missing file (reads fail loud; the refreshManifest heal then
+    // silently drops the statement — a lost update). Deployments
+    // running concurrent writers on one table set the grace above
+    // their max statement duration; the 0 default keeps the
+    // single-writer-per-table eager hygiene exactly as before.
+    // Folds and reads never adopt young debris either way — both
+    // consume the COMMITTED sidecar set ([[snapOf]]), never a disk
+    // listing.
+    val graceMs = sidecarSweepGraceMs
+    val now = System.currentTimeMillis()
+    Seq(deletesDir(table), patchesDir(table)).foreach { d =>
+      fs.listFiles(d).foreach { case (p, _, mt) =>
+        fs.relativeTo(path(table), p).foreach { rel =>
+          // ANY uncommitted file goes, not just parquet: the
+          // sidecar dirs are wholly protocol-owned (committed
+          // state lists every file, `_SUCCESS` included), and a
+          // parquet-only sweep left a crashed fold's batch dir as
+          // a `_SUCCESS`-only husk that the disk-level
+          // patchBatches listing then fed to spark.read as an
+          // unreadable empty batch (found by the ChaosSoak sweep)
+          if (!known.contains(rel) && now - mt >= graceMs)
+            destroyRel(table, rel)
+        }
+      }
+    }
+    stateOf(table)
   }
 
   /** The one-flip recommit + deferred destruction every manifested
@@ -630,9 +640,7 @@ final case class Catalog(spark: SparkSession, root: String) {
         if (m.remove.nonEmpty) m.remove.foreach(destroyRel(table, _))
       }
     catch { case _: IllegalStateException => () }
-    val prevSeq = Manifest.latestMeta(fs, path(table))
-      .map(nm => Manifest.seqOfName(nm._1)).getOrElse(0L)
-    commitManifest(table, prevSeq, treeEntries(table), Nil)
+    commitTree(table)
     invalidateProjections(table)
   }
 
@@ -642,14 +650,11 @@ final case class Catalog(spark: SparkSession, root: String) {
     * correctness; one recursive LIST, explicit-call-only (the
     * VACUUM analog of the log-structured formats).
     */
-  def vacuum(table: String): Unit =
-    loadManifest(table).foreach { m =>
-      beginMutation(table)
-      val live = loadManifest(table).map(_.entries.map(_.rel).toSet)
-        .getOrElse(Set.empty)
-      treeEntries(table).map(_.rel).filterNot(live)
-        .foreach(destroyRel(table, _))
-    }
+  def vacuum(table: String): Unit = {
+    val live = beginMutation(table).entries.map(_.rel).toSet
+    treeEntries(table).map(_.rel).filterNot(live)
+      .foreach(destroyRel(table, _))
+  }
 
   /** Masked/patched read with FILE-level pruning of the sidecar tax:
     * only files a mask/patch entry actually references pay the
@@ -685,15 +690,12 @@ final case class Catalog(spark: SparkSession, root: String) {
     // any literal `%XX` in a filename (`%3D` → `=`), which is why
     // escaped-partition tables used to fail the subset check below and
     // silently lose the split read. [[normListedUri]] therefore only
-    // strips scheme+authority. Bonus: manifest-served URIs are
-    // `qualifiedBase + "/" + rel` by construction, so their normal form
+    // strips scheme+authority. Snap URIs are `qualifiedBase + "/" +
+    // rel` by construction ([[snapFrom]]), so their normal form
     // is one base normalization + a raw suffix swap — no per-file work.
-    val allNorm =
-      if (s.viaManifest) {
-        val qb = fs.qualify(path(table)).stripSuffix("/")
-        val nb = normListedUri(qb)
-        all.map(p => nb + p.substring(qb.length)).toSet
-      } else all.map(normListedUri).toSet
+    val qb = fs.qualify(path(table)).stripSuffix("/")
+    val nb = normListedUri(qb)
+    val allNorm = all.map(p => nb + p.substring(qb.length)).toSet
     // Fail CLOSED on ANY sidecar URI that matches no listed file — not
     // just on an all-empty match. An unmatched entry is either stale
     // (rewrites mint fresh UUID names and prune their entries, so this
@@ -799,17 +801,9 @@ final case class Catalog(spark: SparkSession, root: String) {
     readTagged(table, snapOf(table))
 
   private def readTagged(table: String, s: Snap): DataFrame = {
-    // manifest-backed snaps serve the scan from their own file set (a
-    // tree listing here would re-adopt crash orphans the manifest
-    // deliberately does not reference — including when the live set is
-    // EMPTY, so that case fails loud instead of falling through)
-    val raw =
-      if (s.viaManifest && s.data.nonEmpty)
-        org.apache.spark.sql.graft.PreListedScan
-          .parquet(spark, fs.qualify(path(table)), s.data)
-      else if (s.viaManifest) throw Catalog.manifestedEmpty(table)
-      else spark.read.parquet(path(table))
-    val scan = raw
+    // the scan serves the snap's own file set (a tree listing here would
+    // adopt crash orphans the manifest deliberately does not reference)
+    val scan = scanOf(table, s)
       .withColumn(Catalog.FileCol, col("_metadata.file_path"))
       .withColumn(Catalog.PosCol, col("_metadata.row_index"))
     applyPatches(table, applyMask(table, scan, s.mask), s.batches)
@@ -907,33 +901,30 @@ final case class Catalog(spark: SparkSession, root: String) {
     * never be read as data.
     */
   def deleteWhereLight(table: String, cond: Column): Unit = {
-    val m = beginMutation(table)
-    val before = if (m.isDefined)
-      fs.listFiles(deletesDir(table)).map(_._1).toSet else Set.empty[String]
+    val prev = beginMutation(table)
+    val before = fs.listFiles(deletesDir(table)).map(_._1).toSet
     val hits = readTagged(table).filter(cond).select(
       col(Catalog.FileCol).as("file"), col(Catalog.PosCol).as("pos"))
     hits.write.mode("append").parquet(deletesDir(table))
     invalidateProjections(table)
-    m.foreach { prev =>
-      // delta = this statement's mask files (one small-dir diff); a
-      // crash before this commit leaves them as swept-away orphans —
-      // the statement never happened, exactly the flip contract.
-      // Under concurrent writers the diff may ALSO pick up a peer's
-      // just-landed mask files (Spark appends surface whole at job
-      // commit, never partially): adopting them commits the peer's
-      // delete — mask entries are self-describing (file, pos) facts,
-      // so whichever writer names them first is equivalent to the
-      // peer's own commit; the peer's retry then diffs to nothing.
-      // This is also why a REFUSED delete must NOT destroy `added`
-      // (it may contain the peer's files) — its own orphans wait for
-      // the grace sweep instead.
-      val added = fs.listFiles(deletesDir(table))
-        .filterNot { case (p, _, _) => before.contains(p) }
-        .flatMap { case (p, len, mt) =>
-          fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
-        }
-      commitManifest(table, prev.seq, prev.entries ++ added, Nil)
-    }
+    // delta = this statement's mask files (one small-dir diff); a
+    // crash before this commit leaves them as swept-away orphans —
+    // the statement never happened, exactly the flip contract.
+    // Under concurrent writers the diff may ALSO pick up a peer's
+    // just-landed mask files (Spark appends surface whole at job
+    // commit, never partially): adopting them commits the peer's
+    // delete — mask entries are self-describing (file, pos) facts,
+    // so whichever writer names them first is equivalent to the
+    // peer's own commit; the peer's retry then diffs to nothing.
+    // This is also why a REFUSED delete must NOT destroy `added`
+    // (it may contain the peer's files) — its own orphans wait for
+    // the grace sweep instead.
+    val added = fs.listFiles(deletesDir(table))
+      .filterNot { case (p, _, _) => before.contains(p) }
+      .flatMap { case (p, len, mt) =>
+        fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
+      }
+    commitManifest(table, prev.seq, prev.entries ++ added, Nil)
   }
 
   /** Apply the table's deletion mask to a tagged scan. Two shapes:
@@ -1163,7 +1154,7 @@ final case class Catalog(spark: SparkSession, root: String) {
   def updateWhereLight(table: String, cond: Column,
       assignments: Map[String, Column]): Unit = {
     require(assignments.nonEmpty, "lightweight update needs assignments")
-    val m = beginMutation(table)
+    val prev = beginMutation(table)
     val parts = partitionColsOf(table)
     val hit = parts.filter(assignments.contains)
     require(hit.isEmpty,
@@ -1185,14 +1176,12 @@ final case class Catalog(spark: SparkSession, root: String) {
     val batchDir = s"${patchesDir(table)}/seq=$seq"
     hits.write.mode("overwrite").parquet(batchDir)
     invalidateProjections(table)
-    m.foreach { prev =>
-      // delta = exactly the new batch dir's files (written whole by
-      // this statement — a scoped list cannot pick up anything else)
-      val added = fs.listFiles(batchDir).flatMap { case (p, len, mt) =>
-        fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
-      }
-      commitManifest(table, prev.seq, prev.entries ++ added, Nil)
+    // delta = exactly the new batch dir's files (written whole by this
+    // statement — a scoped list cannot pick up anything else)
+    val added = fs.listFiles(batchDir).flatMap { case (p, len, mt) =>
+      fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
     }
+    commitManifest(table, prev.seq, prev.entries ++ added, Nil)
   }
 
   private def seqOf(batchDir: String): Long =
@@ -1346,7 +1335,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     * before the data merge materializes them.
     */
   def compactPatches(table: String): Unit = {
-    val m0 = beginMutation(table)
+    val prev = beginMutation(table)
     // COMMITTED batch set (see compactMask's authority note)
     val s0 = snapOf(table)
     val batches = s0.batches.map(_._1)
@@ -1491,25 +1480,19 @@ final case class Catalog(spark: SparkSession, root: String) {
     claimPatchSeq(table, foldSeq)
     val dst = s"${patchesDir(table)}/seq=$foldSeq"
     fs.move(tmp, dst)
-    m0 match {
-      case Some(prev) =>
-        // MANIFESTED: ONE flip adopts the folded batch and drops the
-        // originals' entries; destruction strictly after. Until the
-        // flip the manifest serves the original batches exactly (the
-        // folded dir is an invisible orphan); after it the folded
-        // batch serves with the originals as a reconcile to-do —
-        // every kill point serves, nothing fails loud.
-        val adds = fs.listFiles(dst).flatMap { case (p, len, mt) =>
-          fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
-        }
-        val removes = s0.batches.flatMap(_._2.flatMap(e =>
-          fs.relativeTo(path(table), e._1)))
-        invalidateProjections(table)
-        commitFlip(table, prev, adds, removes)
-      case None =>
-        batches.foreach(fs.rmTree)
-        invalidateProjections(table)
+    // ONE flip adopts the folded batch and drops the originals'
+    // entries; destruction strictly after. Until the flip the manifest
+    // serves the original batches exactly (the folded dir is an
+    // invisible orphan); after it the folded batch serves with the
+    // originals as a reconcile to-do — every kill point serves,
+    // nothing fails loud.
+    val adds = fs.listFiles(dst).flatMap { case (p, len, mt) =>
+      fs.relativeTo(path(table), p).map(Manifest.Entry(_, len, mt))
     }
+    val removes = s0.batches.flatMap(_._2.flatMap(e =>
+      fs.relativeTo(path(table), e._1)))
+    invalidateProjections(table)
+    commitFlip(table, prev, adds, removes)
     evictPatchProbes(table, Some(batches))
   }
 
@@ -1522,7 +1505,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     * patch-side sibling (which needs last-writer-wins, not distinct).
     */
   def compactMask(table: String): Unit = {
-    val m0 = beginMutation(table)
+    val prev = beginMutation(table)
     // COMMITTED sidecar set, not a disk listing: with a sweep grace
     // window a concurrent statement's young uncommitted mask files may
     // exist on disk, and folding them in would adopt a statement that
@@ -1569,21 +1552,13 @@ final case class Catalog(spark: SparkSession, root: String) {
         fs.relativeTo(path(table), dst).map(Manifest.Entry(_, len, mt))
       }
     fs.rmTree(tmp)
-    m0 match {
-      case Some(prev) =>
-        // MANIFESTED: ONE flip adopts the folded file and drops the
-        // originals' entries; destruction strictly after — every kill
-        // point serves (the tree is an add-first superset throughout,
-        // and the manifest names exactly one consistent mask set on
-        // either side of the commit).
-        val removes = before.flatMap(e =>
-          fs.relativeTo(path(table), e._1))
-        invalidateProjections(table)
-        commitFlip(table, prev, adds, removes)
-      case None =>
-        before.foreach(e => fs.rmTree(e._1))
-        invalidateProjections(table)
-    }
+    // ONE flip adopts the folded file and drops the originals' entries;
+    // destruction strictly after — every kill point serves (the tree is
+    // an add-first superset throughout, and the manifest names exactly
+    // one consistent mask set on either side of the commit).
+    val removes = before.flatMap(e => fs.relativeTo(path(table), e._1))
+    invalidateProjections(table)
+    commitFlip(table, prev, adds, removes)
   }
 
   /** ClickHouse `ALTER TABLE t APPLY DELETED MASK [IN PARTITION p]`:
@@ -1671,25 +1646,15 @@ final case class Catalog(spark: SparkSession, root: String) {
             "under its mask — refusing to remove it (stale or " +
             "irreconcilable mask entries; OPTIMIZE the table instead)")
       }
-      if (still.nonEmpty) loadManifest(table) match {
-        case Some(m) =>
-          // MANIFESTED: fold write-beside, then the zero-survivor
-          // leaves and the superseded sidecar files drop in ONE flip
-          // (mutatePruned committed its own leaves already; this is
-          // the same shape for the all-masked remainder)
-          val (sideAdds, sideRemoves) = foldSidecars(table, still,
-            defer = true)
-          invalidateProjections(table)
-          commitFlip(table, m, sideAdds,
-            entriesUnder(m, still) ++ sideRemoves)
-        case None =>
-          still.foreach { d =>
-            val leaf = s"${path(table)}/$d"
-            fs.rmTree(leaf)
-            dropEmptyAncestors(parentOf(leaf), path(table))
-          }
-          foldSidecars(table, still, defer = false)
-          invalidateProjections(table)
+      if (still.nonEmpty) {
+        // fold write-beside, then the zero-survivor leaves and the
+        // superseded sidecar files drop in ONE flip (mutatePruned
+        // committed its own leaves already; this is the same shape for
+        // the all-masked remainder)
+        val m = stateOf(table)
+        val (sideAdds, sideRemoves) = foldSidecars(table, still)
+        invalidateProjections(table)
+        commitFlip(table, m, sideAdds, entriesUnder(m, still) ++ sideRemoves)
       }
       else invalidateProjections(table)
     }
@@ -1732,20 +1697,16 @@ final case class Catalog(spark: SparkSession, root: String) {
     * stale entry can never match — this is sidecar hygiene, not
     * correctness. Entries for untouched partitions stay live.
     *
-    * Two modes. `defer = false` (listing-served tables): surviving
-    * entries rewrite under fresh names and the originals are deleted
-    * inline, with the per-kind crash orderings argued below. `defer =
-    * true` (manifested tables — r16 verdict item 1): the SAME
-    * write-beside happens, but nothing is destroyed — the new files
-    * and the superseded rels return for the caller's ONE
-    * [[commitFlip]], making the whole fold part of the mutation's
-    * atomic flip; until that commit the manifest serves the original
-    * sidecars exactly, and the new files are invisible (a crash before
-    * the flip leaves them as the uncommitted orphans
-    * [[beginMutation]]'s sidecar sweep removes).
+    * Surviving entries are written beside the originals under fresh
+    * names and nothing is destroyed: the new files and the superseded
+    * rels return for the caller's ONE [[commitFlip]], making the whole
+    * fold part of the mutation's atomic flip. Until that commit the
+    * manifest serves the original sidecars exactly, and the new files
+    * are invisible (a crash before the flip leaves them as the
+    * uncommitted orphans [[beginMutation]]'s sidecar sweep removes).
     */
-  private def foldSidecars(table: String, dirs: Seq[String],
-      defer: Boolean): (Seq[Manifest.Entry], Seq[String]) = {
+  private def foldSidecars(table: String,
+      dirs: Seq[String]): (Seq[Manifest.Entry], Seq[String]) = {
     if (dirs.isEmpty) return (Nil, Nil)
     val adds = Seq.newBuilder[Manifest.Entry]
     val removes = Seq.newBuilder[String]
@@ -1753,10 +1714,10 @@ final case class Catalog(spark: SparkSession, root: String) {
       throw new IllegalStateException(
         s"foldSidecars: '$p' does not relativize under '${path(table)}'"))
     val gone = !dirs.map(d => col("file").contains(s"/$d/")).reduce(_ || _)
-    // COMMITTED sidecar set (manifest-scoped when manifested), never a
-    // disk listing — see compactMask: under a sweep grace window a
-    // concurrent statement's young uncommitted files must be invisible
-    // to folds exactly as they are to reads
+    // COMMITTED sidecar set, never a disk listing — see compactMask:
+    // under a sweep grace window a concurrent statement's young
+    // uncommitted files must be invisible to folds exactly as they are
+    // to reads
     val s0 = snapOf(table)
     if (s0.maskParquet.nonEmpty) {
       val dir = deletesDir(table)
@@ -1807,30 +1768,22 @@ final case class Catalog(spark: SparkSession, root: String) {
           org.apache.spark.sql.graft.PreListedScan.footerRowCount(spark,
             fs.listFiles(tmp).filter(_._1.endsWith(".parquet"))) == 0L
       }
-      if (empty) {
-        if (driverKeep.isEmpty) fs.rmTree(tmp)
-        if (defer) removes ++= before.map(e => relOf(e._1))
-        else fs.rmTree(dir)
-      } else {
-        val tmpFiles = fs.listFiles(tmp).filter(_._1.endsWith(".parquet"))
+      if (empty && driverKeep.isEmpty) fs.rmTree(tmp)
+      if (!empty) {
         // add-first, the compactMask ordering: mask entries are a SET
         // and the dropped ones reference files the rewrite just
-        // replaced (they filter nothing), so every crash window —
-        // originals only, originals+keep, keep+partial originals —
-        // anti-joins to identical reads. The retired rm-then-move
-        // swap had a NO-MASK window in which live entries for
-        // UNTOUCHED partitions vanished: silent resurrection on
-        // listing-served tables, and a post-crash refreshManifest
-        // would have adopted the maskless tree.
-        tmpFiles.foreach { case (f, len, mt) =>
-          val dst = s"$dir/${f.substring(f.lastIndexOf('/') + 1)}"
-          fs.move(f, dst)
-          if (defer) adds += Manifest.Entry(relOf(dst), len, mt)
+        // replaced (they filter nothing), so the tree stays a superset
+        // of the mask until the flip's cleanup — a post-crash
+        // refreshManifest never adopts a maskless tree.
+        fs.listFiles(tmp).filter(_._1.endsWith(".parquet")).foreach {
+          case (f, len, mt) =>
+            val dst = s"$dir/${f.substring(f.lastIndexOf('/') + 1)}"
+            fs.move(f, dst)
+            adds += Manifest.Entry(relOf(dst), len, mt)
         }
-        if (defer) removes ++= before.map(e => relOf(e._1))
-        else before.foreach(e => fs.rmTree(e._1))
         fs.rmTree(tmp)
       }
+      removes ++= before.map(e => relOf(e._1))
     }
     val batches = s0.batches
     if (batches.nonEmpty) {
@@ -1848,7 +1801,7 @@ final case class Catalog(spark: SparkSession, root: String) {
       // and each fresh seq is CLAIMED ([[claimPatchSeq]]) against
       // concurrent allocators.
       val maxSeq = math.max(seqOf(batches.last._1), diskPatchSeqMax(table))
-      val installed = batches.zipWithIndex.flatMap { case ((b, bfs), i) =>
+      batches.zipWithIndex.foreach { case ((b, bfs), i) =>
         val pfs = bfs.filter(_._1.endsWith(".parquet"))
         val schema = org.apache.spark.sql.graft.PreListedScan
           .footerSchemaOf(spark, pfs)
@@ -1881,27 +1834,17 @@ final case class Catalog(spark: SparkSession, root: String) {
             if (e) fs.rmTree(tmp)
             e
           }
-        if (empty) {
-          None
-        } else {
+        if (!empty) {
           val seq = maxSeq + 1 + i
           claimPatchSeq(table, seq)
           val dst = s"${patchesDir(table)}/seq=$seq"
           fs.move(tmp, dst)
-          if (defer)
-            adds ++= fs.listFiles(dst).map { case (p, len, mt) =>
-              Manifest.Entry(relOf(p), len, mt)
-            }
-          Some(dst)
+          adds ++= fs.listFiles(dst).map { case (p, len, mt) =>
+            Manifest.Entry(relOf(p), len, mt)
+          }
         }
       }
-      if (defer)
-        removes ++= batches.flatMap(_._2.map(e => relOf(e._1)))
-      else {
-        batches.foreach { case (b, _) => fs.rmTree(b) }
-        if (installed.isEmpty && fs.isDir(patchesDir(table)))
-          fs.rmTree(patchesDir(table))
-      }
+      removes ++= batches.flatMap(_._2.map(e => relOf(e._1)))
       evictPatchProbes(table, Some(batches.map(_._1)))
     }
     (adds.result(), removes.result())
@@ -1930,10 +1873,9 @@ final case class Catalog(spark: SparkSession, root: String) {
     * partitions are NOT part of that contract — a FREEZE snapshot is
     * documented as physically independent of later mutations, and a
     * parked partition must survive an OPTIMIZE of the live data — so
-    * both swap modes leave the preserved subtrees untouched.
+    * the swap leaves the preserved subtrees untouched.
     *
-    * MANIFESTED table (the default): the swap is an ATOMIC POINTER
-    * FLIP. New files are written beside the old (fresh UUID names —
+    * The swap is an ATOMIC POINTER FLIP. New files are written beside the old (fresh UUID names —
     * collision-free), then ONE manifest commit makes them the live set
     * with every old file on the `remove` list, and only then is
     * anything destroyed. A crash before the commit leaves the old
@@ -1942,70 +1884,51 @@ final case class Catalog(spark: SparkSession, root: String) {
     * with the cleanup as a reconcile to-do. There is no window in
     * which a read is partial or wrong — the r13/r14 crash-window
     * finding, closed by the same mechanism that makes construction
-    * O(1) (the judge's "two findings, one mechanism").
-    *
-    * Legacy (never-manifested, manifests disabled) table: the in-place
-    * child swap — remove current children, move new ones in — whose
-    * crash window can leave the DATA partial; `_shadow` backups stand
-    * and recovery is manual (documented since r13).
+    * O(1).
     */
   private def writeReplacing(table: String, df: DataFrame): Unit = {
-    val m = beginMutation(table)
+    val prev = beginMutation(table)
     val parts = partitionColsOf(table)
     val tmp = path(table) + "__tmp"
     val w = df.write.mode("overwrite").options(opts(table))
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-    m match {
-      case Some(prev) =>
-        // 1. new files in, beside the old (file-level moves: partition
-        //    dirs may be shared, file names cannot collide)
-        val moved = fs.listFiles(tmp).flatMap { case (p, len, mt) =>
-          fs.relativeTo(tmp, p).filter(fs.isDataRel).map { rel =>
-            val dst = s"${path(table)}/$rel"
-            fs.mkdirs(parentOf(dst))
-            fs.move(p, dst)
-            Manifest.Entry(rel, len, mt)
-          }
-        }
-        // 2. THE FLIP — the one atomicity point. On a refusal the old
-        //    state serves untouched and `moved` are this rewrite's own
-        //    fresh-named files: destroy them (else a retry loop leaks
-        //    a full rewrite's bytes per refused attempt).
-        val removeRels = prev.entries.map(_.rel)
-        val st =
-          try commitManifest(table, prev.seq, moved, removeRels)
-          catch {
-            case e: ConcurrentCommitException =>
-              moved.foreach(a => destroyRel(table, a.rel))
-              fs.rmTree(tmp)
-              throw e
-          }
-        // 3. destruction, strictly after the flip (a kill anywhere
-        //    below is finished by the next mutation's reconcile)
-        removeRels.foreach(destroyRel(table, _))
-        // single-writer-only cosmetics — see commitFlip's note
-        if (sidecarSweepGraceMs == 0L)
-          Seq(deletesDir(table), patchesDir(table)).foreach { d =>
-            if (fs.isDir(d) && !fs.hasParquetUnder(d)) fs.rmTree(d)
-          }
-        fs.rmTree(tmp)
-        invalidateProjections(table)
-        // hygiene commit — refusal swallowed; see commitFlip: the flip
-        // landed, and the refusing successor's reconcile owns cleanup
-        try { commitManifest(table, st.seq, moved, Nil); () }
-        catch { case _: ConcurrentCommitException => () }
-      case None =>
-        fs.listChildren(path(table)).foreach { case (c, _) =>
-          if (!Catalog.PreservedSubtrees.contains(c))
-            fs.rmTree(s"${path(table)}/$c")
-        }
-        fs.mkdirs(path(table))
-        fs.listChildren(tmp).foreach { case (c, _) =>
-          fs.move(s"$tmp/$c", s"${path(table)}/$c")
-        }
-        fs.rmTree(tmp)
-        invalidateProjections(table)
+    // 1. new files in, beside the old (file-level moves: partition
+    //    dirs may be shared, file names cannot collide)
+    val moved = fs.listFiles(tmp).flatMap { case (p, len, mt) =>
+      fs.relativeTo(tmp, p).filter(fs.isDataRel).map { rel =>
+        val dst = s"${path(table)}/$rel"
+        fs.mkdirs(parentOf(dst))
+        fs.move(p, dst)
+        Manifest.Entry(rel, len, mt)
+      }
     }
+    // 2. THE FLIP — the one atomicity point. On a refusal the old
+    //    state serves untouched and `moved` are this rewrite's own
+    //    fresh-named files: destroy them (else a retry loop leaks
+    //    a full rewrite's bytes per refused attempt).
+    val removeRels = prev.entries.map(_.rel)
+    val st =
+      try commitManifest(table, prev.seq, moved, removeRels)
+      catch {
+        case e: ConcurrentCommitException =>
+          moved.foreach(a => destroyRel(table, a.rel))
+          fs.rmTree(tmp)
+          throw e
+      }
+    // 3. destruction, strictly after the flip (a kill anywhere
+    //    below is finished by the next mutation's reconcile)
+    removeRels.foreach(destroyRel(table, _))
+    // single-writer-only cosmetics — see commitFlip's note
+    if (sidecarSweepGraceMs == 0L)
+      Seq(deletesDir(table), patchesDir(table)).foreach { d =>
+        if (fs.isDir(d) && !fs.hasParquetUnder(d)) fs.rmTree(d)
+      }
+    fs.rmTree(tmp)
+    invalidateProjections(table)
+    // hygiene commit — refusal swallowed; see commitFlip: the flip
+    // landed, and the refusing successor's reconcile owns cleanup
+    try { commitManifest(table, st.seq, moved, Nil); () }
+    catch { case _: ConcurrentCommitException => () }
     evictPatchProbes(table, None)
   }
 
@@ -2023,7 +1946,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     */
   private def mutatePruned(table: String, cond: Column)
       (transform: DataFrame => DataFrame): Unit = {
-    val m0 = beginMutation(table)
+    val prev = beginMutation(table)
     val parts = partitionColsOf(table)
     // masked read everywhere: a heavy mutation must see the net state the
     // lightweight deletes established (and its rewrite materializes them)
@@ -2053,53 +1976,32 @@ final case class Catalog(spark: SparkSession, root: String) {
     out.write.mode("overwrite").options(opts(table))
       .partitionBy(parts: _*).parquet(tmp)
     val affectedDirs = affected.map(dirOf).toSeq
-    m0 match {
-      case Some(prev) =>
-        // MANIFESTED: the pruned mutation is ONE atomic flip, exactly
-        // writeReplacing's shape scoped to the affected leaves (r16
-        // verdict item 1 — the previous destroy-then-recommit left a
-        // mid-window kill failing loud until refreshManifest).
-        // 1. the rewritten leaves' files move in BESIDE the old ones
-        //    (fresh UUID names — invisible until the flip; a leaf whose
-        //    every row was deleted contributes nothing);
-        val moved = fs.listFiles(tmp).flatMap { case (p, len, mt) =>
-          fs.relativeTo(tmp, p).filter(fs.isDataRel).map { rel =>
-            val dst = s"${path(table)}/$rel"
-            fs.mkdirs(parentOf(dst))
-            fs.move(p, dst)
-            Manifest.Entry(rel, len, mt)
-          }
-        }
-        fs.rmTree(tmp)
-        // 2. sidecar fold, write-beside (entries under the rewritten
-        //    leaves are materialized by the rewrite; survivors land
-        //    under fresh names, originals stay until the flip);
-        val (sideAdds, sideRemoves) = foldSidecars(table, affectedDirs,
-          defer = true)
-        invalidateProjections(table)
-        // 3. THE FLIP + deferred destruction: old leaf files and old
-        //    sidecar files out, new ones in, one commit. Every kill
-        //    point serves — old state before the commit, new after.
-        commitFlip(table, prev, moved ++ sideAdds,
-          entriesUnder(prev, affectedDirs) ++ sideRemoves)
-      case None =>
-        // LEGACY (listing-served): the in-place per-leaf swap, whose
-        // crash window can leave a leaf partial — documented since r13.
-        affected.foreach { vs =>
-          val src = s"$tmp/${dirOf(vs)}"
-          val dst = s"${path(table)}/${dirOf(vs)}"
-          if (fs.exists(src)) fs.replaceDir(src, dst)
-          else { // every row of this leaf was deleted
-            fs.rmTree(dst)
-            // an ancestor left empty would break later layout detection
-            // (partitionColsOf descends the first `col=` child it finds)
-            dropEmptyAncestors(parentOf(dst), path(table))
-          }
-        }
-        fs.rmTree(tmp)
-        foldSidecars(table, affectedDirs, defer = false)
-        invalidateProjections(table)
+    // the pruned mutation is ONE atomic flip, exactly writeReplacing's
+    // shape scoped to the affected leaves (r16 verdict item 1 — the
+    // previous destroy-then-recommit left a mid-window kill failing
+    // loud until refreshManifest).
+    // 1. the rewritten leaves' files move in BESIDE the old ones (fresh
+    //    UUID names — invisible until the flip; a leaf whose every row
+    //    was deleted contributes nothing);
+    val moved = fs.listFiles(tmp).flatMap { case (p, len, mt) =>
+      fs.relativeTo(tmp, p).filter(fs.isDataRel).map { rel =>
+        val dst = s"${path(table)}/$rel"
+        fs.mkdirs(parentOf(dst))
+        fs.move(p, dst)
+        Manifest.Entry(rel, len, mt)
+      }
     }
+    fs.rmTree(tmp)
+    // 2. sidecar fold, write-beside (entries under the rewritten leaves
+    //    are materialized by the rewrite; survivors land under fresh
+    //    names, originals stay until the flip);
+    val (sideAdds, sideRemoves) = foldSidecars(table, affectedDirs)
+    invalidateProjections(table)
+    // 3. THE FLIP + deferred destruction: old leaf files and old sidecar
+    //    files out, new ones in, one commit. Every kill point serves —
+    //    old state before the commit, new after.
+    commitFlip(table, prev, moved ++ sideAdds,
+      entriesUnder(prev, affectedDirs) ++ sideRemoves)
   }
 
   private def parentOf(p: String): String = p.substring(0, p.lastIndexOf('/'))
@@ -2188,7 +2090,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     dropPartition(table, Seq(partCol -> value))
 
   def dropPartition(table: String, segs: Seq[(String, String)]): Unit = {
-    val m0 = beginMutation(table)
+    val prev = beginMutation(table)
     // loud on layout mismatch (r9 ADVICE): a table not partitioned by
     // these columns means retention would silently delete nothing.
     val onDisk = partitionColsOf(table)
@@ -2199,33 +2101,23 @@ final case class Catalog(spark: SparkSession, root: String) {
       "dropPartition would be a silent no-op")
     val dir = partitionPath(table, segs)
     if (fs.exists(dir)) {
-      m0 match {
-        case Some(prev) =>
-          // MANIFESTED: sidecar fold write-beside, then ONE flip that
-          // drops the partition's entries and the superseded sidecar
-          // files together — destruction strictly after (the dir's
-          // remaining bytes, if a crash interrupts, are invisible
-          // orphans finished by the next reconcile). Sidecar entries
-          // under the dropped directory are applied by definition (the
-          // rows are gone); removing them means a later ATTACH into
-          // the same partition can never meet a stale entry.
-          val rel = relSeg(segs)
-          val (sideAdds, sideRemoves) =
-            foldSidecars(table, Seq(rel), defer = true)
-          invalidateProjections(table)
-          commitFlip(table, prev, sideAdds,
-            entriesUnder(prev, Seq(rel)) ++ sideRemoves)
-          // the flip's per-file removal leaves the (possibly orphan-
-          // holding) directory: the drop semantics say it is GONE
-          fs.rmTree(dir)
-          dropEmptyAncestors(parentOf(dir), path(table))
-        case None =>
-          fs.rmTree(dir)
-          // a leaf drop may leave empty ancestor directories behind
-          dropEmptyAncestors(parentOf(dir), path(table))
-          foldSidecars(table, Seq(relSeg(segs)), defer = false)
-          invalidateProjections(table)
-      }
+      // sidecar fold write-beside, then ONE flip that drops the
+      // partition's entries and the superseded sidecar files together —
+      // destruction strictly after (the dir's remaining bytes, if a
+      // crash interrupts, are invisible orphans finished by the next
+      // reconcile). Sidecar entries under the dropped directory are
+      // applied by definition (the rows are gone); removing them means
+      // a later ATTACH into the same partition can never meet a stale
+      // entry.
+      val rel = relSeg(segs)
+      val (sideAdds, sideRemoves) = foldSidecars(table, Seq(rel))
+      invalidateProjections(table)
+      commitFlip(table, prev, sideAdds,
+        entriesUnder(prev, Seq(rel)) ++ sideRemoves)
+      // the flip's per-file removal leaves the (possibly orphan-holding)
+      // directory: the drop semantics say it is GONE
+      fs.rmTree(dir)
+      dropEmptyAncestors(parentOf(dir), path(table))
     }
   }
 
@@ -2295,7 +2187,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     detachPartition(table, Seq(partCol -> value))
 
   def detachPartition(table: String, segs: Seq[(String, String)]): Unit = {
-    val m0 = beginMutation(table)
+    val m = beginMutation(table)
     val src = partitionPath(table, segs)
     require(fs.isDir(src),
       s"no partition '${segs.map(_._2).mkString(",")}' on '$table'")
@@ -2312,7 +2204,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     // invisible orphans and this DETACH re-runnable (src still there,
     // dst still absent) — reads serve at every point. The old
     // move-then-recommit order failed loud in that window.
-    m0.foreach(m => commitRetire(table, m, relSeg(segs)))
+    commitRetire(table, m, relSeg(segs))
     fs.mkdirs(detachedDir(table))
     fs.move(src, dst)
     dropEmptyAncestors(parentOf(src), path(table))
@@ -2324,7 +2216,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     attachPartition(table, Seq(partCol -> value))
 
   def attachPartition(table: String, segs: Seq[(String, String)]): Unit = {
-    val m0 = beginMutation(table)
+    val m = beginMutation(table)
     val dst = partitionPath(table, segs)
     val src = s"${detachedDir(table)}/${detachedName(segs)}"
     require(fs.isDir(src),
@@ -2339,7 +2231,7 @@ final case class Catalog(spark: SparkSession, root: String) {
     // present but unserved ("attach not yet happened") — reads keep
     // serving; re-ATTACH is refused (dst exists), refreshManifest
     // finishes the adoption.
-    m0.foreach(m => commitAdopt(table, m, relSeg(segs)))
+    commitAdopt(table, m, relSeg(segs))
   }
 
   /** `ALTER TABLE dst ATTACH|REPLACE PARTITION v FROM src`: COPY the
@@ -2352,7 +2244,7 @@ final case class Catalog(spark: SparkSession, root: String) {
 
   def attachPartitionFrom(dst: String, src: String,
       segs: Seq[(String, String)], replace: Boolean): Unit = {
-    val m0 = beginMutation(dst)
+    val m = beginMutation(dst)
     requireNoSidecarUnder(src, segs)
     // the DESTINATION guard closes a repeat-copy hazard: a second copy
     // from the same source re-creates the same file NAMES, which stale
@@ -2369,9 +2261,10 @@ final case class Catalog(spark: SparkSession, root: String) {
         s"'$dst' — use REPLACE")
     fs.copyTree(from, to)
     invalidateProjections(dst)
-    // a crash mid-copy leaves a partial leaf UNSERVED (strictly better
-    // than the legacy visible-partial); REPLACE re-runs clean
-    m0.foreach(m => commitAdopt(dst, m, relSeg(segs)))
+    // a crash mid-copy leaves a partial leaf UNSERVED; REPLACE re-runs
+    // clean (a destination the copy itself created has no manifest yet,
+    // so first touch adopts the partial leaf — REPLACE it the same way)
+    commitAdopt(dst, m, relSeg(segs))
   }
 
   /** `ALTER TABLE src MOVE PARTITION v TO TABLE dst`: the directory
@@ -2398,13 +2291,13 @@ final case class Catalog(spark: SparkSession, root: String) {
     // the two commits the partition is "in transit" (gone from src's
     // live set, not yet in dst's), the same intermediate state the
     // DETACH+ATTACH pair it decomposes into would show.
-    mSrc.foreach(m => commitRetire(src, m, relSeg(segs)))
+    commitRetire(src, mSrc, relSeg(segs))
     fs.mkdirs(parentOf(to))
     fs.move(from, to)
     dropEmptyAncestors(parentOf(from), path(src))
     invalidateProjections(src)
     invalidateProjections(dst)
-    mDst.foreach(m => commitAdopt(dst, m, relSeg(segs)))
+    commitAdopt(dst, mDst, relSeg(segs))
   }
 
   // ---- backups (CH ALTER ... FREEZE family) ------------------------------
@@ -2432,8 +2325,8 @@ final case class Catalog(spark: SparkSession, root: String) {
       s"backup name '$n' has a non-trivial directory encoding")
     val dst = s"${shadowDir(table)}/$n"
     require(!fs.exists(dst), s"backup '$n' already exists on '$table'")
-    // manifested tables freeze the MANIFEST's file set, not the tree:
-    // a crash orphan must never enter a snapshot (a later restore +
+    // freeze the MANIFEST's file set, not the tree: a crash orphan must
+    // never enter a snapshot (a later restore +
     // ATTACH adopts the restored directory wholesale). beginMutation
     // first so an interrupted cleanup cannot freeze removed-pending
     // files either.
@@ -2443,33 +2336,19 @@ final case class Catalog(spark: SparkSession, root: String) {
         s"table '$table' has outstanding lightweight mutations — " +
           "OPTIMIZE first, then FREEZE")
       fs.mkdirs(dst)
-      m match {
-        case Some(st) =>
-          st.entries.filter(e => fs.isDataRel(e.rel)).foreach(e =>
-            fs.copyTree(s"${path(table)}/${e.rel}", s"$dst/${e.rel}"))
-        case None =>
-          fs.listChildren(path(table))
-            .filterNot { case (c, _) => c.startsWith("_") }
-            .foreach { case (c, _) =>
-              fs.copyTree(s"${path(table)}/$c", s"$dst/$c") }
-      }
+      m.entries.filter(e => fs.isDataRel(e.rel)).foreach(e =>
+        fs.copyTree(s"${path(table)}/${e.rel}", s"$dst/${e.rel}"))
     } else {
       requireNoSidecarUnder(table, segs)
       val src = partitionPath(table, segs)
       require(fs.isDir(src),
         s"no partition '${segs.map(_._2).mkString(",")}' on '$table'")
       val p = relSeg(segs)
-      m match {
-        case Some(st) =>
-          val under = st.entries.filter(e =>
-            e.rel == p || e.rel.startsWith(p + "/"))
-          require(under.nonEmpty,
-            s"partition '$p' of '$table' has no manifested files")
-          under.foreach(e =>
-            fs.copyTree(s"${path(table)}/${e.rel}", s"$dst/${e.rel}"))
-        case None =>
-          fs.copyTree(src, s"$dst/$p")
-      }
+      val under = m.entries.filter(e => e.rel == p || e.rel.startsWith(p + "/"))
+      require(under.nonEmpty,
+        s"partition '$p' of '$table' has no manifested files")
+      under.foreach(e =>
+        fs.copyTree(s"${path(table)}/${e.rel}", s"$dst/${e.rel}"))
     }
     n
   }
@@ -2557,20 +2436,13 @@ final case class Catalog(spark: SparkSession, root: String) {
     * mutation is not killable either).
     */
   def killMutations(table: String): Unit = {
-    val m0 = beginMutation(table)
-    m0 match {
-      case Some(prev) =>
-        // ONE flip drops every sidecar entry; destruction strictly
-        // after (the old destroy-then-recommit failed loud on a kill
-        // between the two)
-        invalidateProjections(table)
-        commitFlip(table, prev, Nil,
-          entriesUnder(prev, Seq("_deletes", "_patches")))
-      case None =>
-        fs.rmTree(deletesDir(table))
-        fs.rmTree(patchesDir(table))
-        invalidateProjections(table)
-    }
+    val prev = beginMutation(table)
+    // ONE flip drops every sidecar entry; destruction strictly after
+    // (the old destroy-then-recommit failed loud on a kill between the
+    // two)
+    invalidateProjections(table)
+    commitFlip(table, prev, Nil,
+      entriesUnder(prev, Seq("_deletes", "_patches")))
     evictPatchProbes(table, None)
   }
 
@@ -2630,8 +2502,10 @@ final case class Catalog(spark: SparkSession, root: String) {
     val rows: Seq[(String, String, Long, Long, Long)] =
       fs.listDirNames(root).flatMap { table =>
         // committed sidecar view (and never a dir read a grace-window
-        // husk could crash)
-        val s0 = snapOf(table)
+        // husk could crash). An introspection view adopts nothing: a
+        // directory no Catalog call has touched (or a fold's staging
+        // sibling) has no committed mutations.
+        val s0 = loadManifest(table).fold(Snap(Nil, Nil, Nil))(snapFrom(_, table))
         val del =
           if (s0.maskParquet.isEmpty) Nil
           else Seq((table, "delete_mask", 1L,
@@ -2672,14 +2546,6 @@ object Catalog {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("pos",
         org.apache.spark.sql.types.LongType)))
-
-  /** Table-dir children a full rewrite-and-swap must leave standing:
-    * `_shadow` FREEZE backups and `_detached` parked partitions are
-    * independent of the live data by contract. `_deletes`/`_patches`
-    * are deliberately NOT here — the swap is their materialization
-    * point (see [[Catalog.writeReplacing]]).
-    */
-  private[operators] val PreservedSubtrees = Set("_shadow", "_detached")
 
   /** [[Catalog.sidecarFileUris]] memo: table path -> (per-sidecar-dir
     * file listings at compute time, referenced-file URI set). Entries
@@ -2770,19 +2636,26 @@ object Catalog {
   private[graft] def sessionKey(spark: SparkSession): String =
     org.apache.spark.sql.graft.Bridge.sessionUUID(spark)
 
-  /** A manifested table whose snapshot names ZERO live data files must
-    * not be handed to `spark.read.parquet(dir)`: the tree can hold
-    * uncommitted crash orphans (an interrupted append before its commit),
-    * and a listing would ADOPT them as data — the exact read the
-    * authority contract forbids. Fail loud instead; `refreshManifest` is
-    * the explicit adoption hatch if the orphans are wanted.
+  /** A table whose snapshot names ZERO live data files has nothing to
+    * scan: the tree can hold uncommitted crash orphans (an interrupted
+    * append before its commit), and reading the directory would ADOPT
+    * them as data — the exact read the authority contract forbids. Fail
+    * loud instead; `refreshManifest` is the explicit adoption hatch if
+    * the orphans are wanted.
     */
   private[operators] def manifestedEmpty(table: String): Throwable =
     new IllegalStateException(
       s"catalog: manifested table '$table' has no live data files — " +
-        "refusing the tree-listing fallback (it would adopt uncommitted " +
-        "files as data); run refreshManifest to adopt the tree, or " +
-        "re-create the table")
+        "refusing to read the tree (it would adopt uncommitted files as " +
+        "data); run refreshManifest to adopt the tree, or re-create the " +
+        "table")
+
+  /** The state of a table with no directory ([[Catalog.stateOf]]):
+    * nothing committed, nothing live. Sequence 0 is never a committed
+    * snapshot's, so `seq == 0` tells a mutation its table does not exist
+    * yet.
+    */
+  private[operators] val Absent = Manifest.State(0L, "", 0L, Nil, Nil)
 
   /** Default ceiling on MASK ENTRIES for the broadcast grouped probe
     * (and for broadcasting the anti-join's build side): the byte gates

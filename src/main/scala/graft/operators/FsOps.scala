@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, LocalFileSystem, RawLocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, RawLocalFileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem facade for [[Catalog]]'s directory-level table operations
@@ -88,24 +88,30 @@ class FsOps(conf: Configuration) {
     * masked read. On an object store the trade is one LIST per
     * directory instead of one flat LIST — directory counts in our
     * layouts are partition-bounded, and no fake locations are fetched.
+    *
+    * The walk is safe beside a concurrent Spark write into the same
+    * tree: `_temporary` subtrees are the output committer's staging and
+    * hold no committed state, so they are skipped, and a subdirectory
+    * that vanishes between its parent's listing and the descent (a
+    * peer's job commit deleting its staging) reads as empty. `p` itself
+    * absent reads as empty too; `p` a file lists that file.
     */
   def listFiles(p: String): Seq[(String, Long, Long)] = {
     val h = new HPath(p)
     val f = fs(h)
-    if (!f.exists(h)) Nil
-    else {
-      val out = Seq.newBuilder[(String, Long, Long)]
-      def walk(d: HPath): Unit = f.listStatus(d).foreach { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else out += ((s.getPath.toString, s.getLen, s.getModificationTime))
+    val out = Seq.newBuilder[(String, Long, Long)]
+    def walk(d: HPath): Unit = {
+      val children =
+        try f.listStatus(d)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      children.foreach { s =>
+        if (!s.isDirectory)
+          out += ((s.getPath.toString, s.getLen, s.getModificationTime))
+        else if (s.getPath.getName != "_temporary") walk(s.getPath)
       }
-      if (f.getFileStatus(h).isDirectory) walk(h)
-      else {
-        val s = f.getFileStatus(h)
-        out += ((s.getPath.toString, s.getLen, s.getModificationTime))
-      }
-      out.result().sortBy(_._1)
     }
+    walk(h)
+    out.result().sortBy(_._1)
   }
 
   /** Fully-qualified URI string of `p` (scheme + authority filled in
@@ -271,12 +277,6 @@ class FsOps(conf: Configuration) {
     val s = new HPath(src)
     val d = new HPath(dst)
     require(fs(s).rename(s, d), s"rename failed: $src -> $dst")
-  }
-
-  /** Remove `dst` (if present) and move `src` into its place. */
-  def replaceDir(src: String, dst: String): Unit = {
-    rmTree(dst)
-    move(src, dst)
   }
 
   /** Recursive copy, `src` left intact (CH ATTACH/REPLACE PARTITION FROM

@@ -24,14 +24,15 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
   *     Catalog already states is what external writers break by writing
   *     around the API; [[Catalog.refreshManifest]] is the explicit
   *     reconciliation hatch.
-  *   - A table WITHOUT a `_manifest` directory reads through the
-  *     filesystem listing exactly as before — the fallback, and the
-  *     compatibility mode for tables written by anything else.
+  *   - A directory WITHOUT a `_manifest` (a tree written by anything
+  *     else) is adopted once, on its first read or mutation through
+  *     [[Catalog]]: its tree becomes the first snapshot. Every Catalog
+  *     table is therefore manifested; there is no listing-served mode.
   *   - A `_manifest` directory whose snapshots are unreadable is
-  *     CORRUPTION and fails loud. Falling back to the listing here
-  *     would be unsound: the tree of a manifested table legitimately
-  *     carries uncommitted files (crash windows, pre-cleanup states),
-  *     and a listing would adopt them as data. Stale/absent → listing;
+  *     CORRUPTION and fails loud. Re-adopting the tree here would be
+  *     unsound: the tree of a manifested table legitimately carries
+  *     uncommitted files (crash windows, pre-cleanup states), and a
+  *     listing would adopt them as data. Absent → adopt once;
   *     present-but-broken → error, never a wrong read.
   *
   * Commit protocol (driver-serialized within a process, optimistic
@@ -188,9 +189,10 @@ object Manifest {
       s"manifest: not a snapshot name: '$snapName'")
   }
 
-  /** Parse the latest snapshot. None = no snapshot exists (legacy
-    * table); a PRESENT but unreadable snapshot throws — see the class
-    * doc for why that must not fall back to the listing.
+  /** Parse the latest snapshot. None = nothing committed yet (no
+    * table directory, or one [[Catalog]] has not adopted); a PRESENT but
+    * unreadable snapshot throws — see the class doc for why that must
+    * not fall back to the listing.
     */
   def load(fs: FsOps, tableDir: String): Option[State] =
     latestMeta(fs, tableDir).map { case (name, len) =>

@@ -50,6 +50,14 @@ object Bridge {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** The error `spark.read.parquet` raises for a missing path
+    * (`PATH_NOT_FOUND`) — a read of a table with no directory fails the
+    * way a parquet read of it always did. The factory is `private[sql]`.
+    */
+  def pathNotFound(qualifiedPath: String): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors
+      .dataPathNotExistError(qualifiedPath)
+
   /** DataFrame over driver-held INTERNAL rows (a `LocalRelation`) —
     * the write side of graft's driver-side sidecar folds: a fold whose
     * inputs are already collected on the driver (the probe broadcast

@@ -293,12 +293,11 @@ class Bm25IndexSpec extends AnyFunSuite {
   // ---- durability (save/load) ------------------------------------------
 
   test("save/load round trip: bit-equal serving, compacted segments, stats verbatim") {
-    import graft.operators.AnnIndex
     val a = docs.filter(col("doc_id") < 400)
     val b = docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
     val ix = Bm25Index.build(a, "doc_id", "text", shards = 4)
       .insert(b, "doc_id", "text") // durable artifact of an LSM chain
-    val path = AnnIndex.tmpRoot + "/bm25_spec_rt"
+    val path = s"${TestSpark.tmpRoot}/bm25_spec_rt"
     Bm25Index.save(spark, ix, path)
     val loaded = Bm25Index.load(spark, path)
     try {
@@ -319,11 +318,10 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("tombstones persist through save/load; pinned meta round-trips durably") {
-    import graft.operators.AnnIndex
     val ix = Bm25Index.build(docs.filter(col("doc_id") < 300), "doc_id", "text", 4)
     val victim = ix.topK(Seq("query"), 1).head._1
     ix.delete(Seq(victim))
-    val path = AnnIndex.tmpRoot + "/bm25_spec_tomb"
+    val path = s"${TestSpark.tmpRoot}/bm25_spec_tomb"
     Bm25Index.save(spark, ix, path)
     val loaded = Bm25Index.load(spark, path)
     try {
@@ -341,7 +339,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     val pinned = Bm25Index.build(docs.filter(col("doc_id") < 100),
       "doc_id", "text", 2, metaCols = Seq("lang", "n_chars"))
     try {
-      val path2 = AnnIndex.tmpRoot + "/bm25_spec_pinned"
+      val path2 = s"${TestSpark.tmpRoot}/bm25_spec_pinned"
       Bm25Index.save(spark, pinned, path2)
       val lp = Bm25Index.load(spark, path2)
       try {

@@ -349,6 +349,39 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(treeRels() == committedRels())
   }
 
+  test("tree walks beside a peer's job commit: vanished dirs read empty, staging skipped") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Catalog
+    val root = tmp("conc-vanish")
+    Seq("a", "b").foreach(d =>
+      fs.writeBytes(s"$root/d/$d/$d.parquet", Array[Byte](1)))
+    val seed = Catalog(spark, root)
+    seed.create("t", spark.range(400).toDF("id").repartition(2))
+    seed.deleteWhereLight("t", col("id") === 1L)
+    // a peer's lightweight DELETE mid-job: Spark stages under
+    // `_deletes/_temporary` and removes it at job commit
+    fs.writeBytes(s"$root/t/_deletes/_temporary/0/part-0.parquet",
+      Array[Byte](1))
+    // every listing through the factory deletes the listed directory's
+    // `b` and `_temporary` children right after returning them
+    VanishingFs.victims = Set("b", "_temporary")
+    FsOps.factory = conf => new FsOps(VanishingFs.conf(conf))
+    try {
+      val names = FsOps(spark).listFiles(s"$root/d")
+        .map(e => e._1.substring(e._1.lastIndexOf('/') + 1))
+      assert(names == Seq("a.parquet"))
+      // the mutation preamble's sidecar sweep and the delete's own
+      // before/after diff both walk `_deletes` while the staging goes
+      Catalog(spark, root).deleteWhereLight("t", col("id") === 3L)
+    } finally {
+      FsOps.factory = conf => new FsOps(conf)
+      VanishingFs.victims = Set.empty
+    }
+    val left = Catalog(spark, root).readRaw("t").select("id").collect()
+      .map(_.getLong(0)).toSet
+    assert(left.size == 398 && !left(1L) && !left(3L))
+  }
+
   test("Par.jobs: every failure surfaces, the rest suppressed on the first") {
     val a = new RuntimeException("a")
     val b = new IllegalStateException("b")
@@ -356,5 +389,34 @@ class ConcurrencySpec extends AnyFunSuite {
     val ex = intercept[Throwable](Par.jobs(() => throw a, () => throw b, () => ran = true))
     assert(ran)
     assert((ex +: ex.getSuppressed.toSeq).toSet == Set[Throwable](a, b))
+  }
+}
+
+/** Local filesystem whose `listStatus` deletes the listed directory's
+  * children named in [[VanishingFs.victims]] right after returning
+  * them: the interleaving in which a peer's Spark job commit removes its
+  * `_temporary` staging between a tree walk's parent listing and its
+  * descent, made deterministic.
+  */
+class VanishingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val out = super.listStatus(f)
+    out.filter(s => s.isDirectory && VanishingFs.victims(s.getPath.getName))
+      .foreach(s => delete(s.getPath, true))
+    out
+  }
+}
+
+object VanishingFs {
+  @volatile var victims: Set[String] = Set.empty
+
+  /** `conf` with the `file` scheme bound to a fresh [[VanishingFs]]. */
+  def conf(base: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration(base)
+    c.set("fs.file.impl", classOf[VanishingFs].getName)
+    c.setBoolean("fs.file.impl.disable.cache", true)
+    c
   }
 }

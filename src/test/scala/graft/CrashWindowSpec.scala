@@ -20,7 +20,7 @@ class CrashWindowSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val real = FsOps(spark)
-  private def root = "/root/repo/target/tmp/crashwin"
+  private def root = s"${TestSpark.tmpRoot}/crashwin"
 
   /** One seeded table per suite run: 3 partitions, a live deletion
     * mask (day=0 fully masked — the zero-survivor branch), two patch

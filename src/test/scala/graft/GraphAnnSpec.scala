@@ -223,7 +223,7 @@ class GraphAnnSpec extends AnyFunSuite {
   }
 
   test("save/load round-trip: loaded index is bit-identical, no construction on load") {
-    val path = "/root/repo/target/tmp/ivfgraph_saveload_spec"
+    val path = s"${TestSpark.tmpRoot}/ivfgraph_saveload_spec"
     IvfGraph.save(spark, ivfGraph, path)
     val loaded = IvfGraph.load(spark, path)
     try {
@@ -383,7 +383,7 @@ class GraphAnnSpec extends AnyFunSuite {
       // path, so it cannot re-read the corpus — serves the same filtered
       // results THROUGH the carried tombstones, with the meta schema and
       // per-node values restored bit-equal
-      val path = AnnIndex.tmpRoot + "/meta_durable"
+      val path = s"${TestSpark.tmpRoot}/meta_durable"
       IvfGraph.save(spark0, g, path)
       val loaded = IvfGraph.load(spark0, path)
       try {
@@ -427,7 +427,7 @@ class GraphAnnSpec extends AnyFunSuite {
     val (afterRm, _) = g3.topK(q, 10, nprobe = 6, ef = g3.rows.toInt)
     assert(afterRm.map(_._1).toSet.intersect(dead.toSet).isEmpty)
     // durable form: pending tombstones are serving state and must reload
-    val path = AnnIndex.tmpRoot + "/tomb_save"
+    val path = s"${TestSpark.tmpRoot}/tomb_save"
     IvfGraph.save(spark0, g1, path)
     val loaded = IvfGraph.load(spark0, path)
     try {

@@ -25,8 +25,11 @@ import graft.operators.{Catalog, Manifest, TestAccess}
   *      the cleanup;
   *   5. a present-but-corrupt manifest fails loud — never a listing
   *      fallback that would adopt uncommitted files;
-  *   6. never-manifested tables (or manifests disabled) keep the
-  *      legacy listing path bit-for-bit.
+  *   6. a directory without `_manifest` is adopted once, on its first
+  *      read or mutation (racing first readers commit ONE snapshot),
+  *      and is manifest-served from then on;
+  *   7. manifest-served read construction makes the same number of
+  *      FsOps listings whatever the table's file count.
   */
 class ManifestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -173,7 +176,7 @@ class ManifestSpec extends AnyFunSuite {
     assert(cat.readRaw("t").count() == c - 1)
   }
 
-  test("corrupt manifest fails loud; absent manifest falls back to listing") {
+  test("corrupt manifest fails loud; absent manifest is re-adopted on read") {
     val cat = freshCat("man5")
     cat.create("t", docs(300).repartition(2))
     val fs = TestAccess.fsOps(cat)
@@ -208,27 +211,13 @@ class ManifestSpec extends AnyFunSuite {
     assert(cat.readRaw("t").count() == 300)
     assert(cat.readRaw("t").queryExecution.executedPlan.toString
       .contains("PreListedFileIndex"))
-    // absent: a never-manifested table takes the listing path
+    // absent: the next read re-adopts the tree and serves it from the
+    // fresh manifest
     fs.rmTree(s"${cat.root}/t/_manifest")
     assert(cat.readRaw("t").count() == 300)
-    assert(!cat.readRaw("t").queryExecution.executedPlan.toString
+    assert(cat.readRaw("t").queryExecution.executedPlan.toString
       .contains("PreListedFileIndex"))
-  }
-
-  test("manifests disabled: legacy listing tables, bit-for-bit") {
-    val cat = freshCat("man6")
-    try {
-      spark.conf.set("spark.graft.manifestEnabled", "false")
-      cat.create("t", docs(400).repartition(2, col("day")), Seq("day"))
-      assert(!TestAccess.fsOps(cat).exists(s"${cat.root}/t/_manifest"))
-      cat.deleteWhereLight("t", col("n") > 80)
-      cat.compact("t", Seq("id"), "n")
-      assert(!TestAccess.fsOps(cat).exists(s"${cat.root}/t/_manifest"))
-      val got = cat.readRaw("t").select("id", "day", "n")
-        .orderBy("id").collect().toSeq
-      assert(got == docs(400).filter(!(col("n") > 80))
-        .select("id", "day", "n").orderBy("id").collect().toSeq)
-    } finally spark.conf.set("spark.graft.manifestEnabled", "true")
+    assert(Manifest.load(fs, s"${cat.root}/t").isDefined)
   }
 
   test("snapshot retention: old generations pruned, latest serves") {
@@ -369,5 +358,88 @@ class ManifestSpec extends AnyFunSuite {
     assert(r.queryExecution.executedPlan.toString.contains("Union"),
       "split read must engage on escaped partition dirs")
     assert(r.count() == 1900)
+  }
+
+  test("first touch adopts a tree without _manifest: read, mutation, racing readers") {
+    val root = Files.createTempDirectory("man14").toString
+    val fs = graft.operators.FsOps(spark)
+    // a parquet tree written around the API: no manifest anywhere
+    docs(600).repartition(3, col("day")).write.partitionBy("day")
+      .parquet(s"$root/t")
+    Seq("u", "v").foreach(c => fs.copyTree(s"$root/t", s"$root/$c"))
+    val want = docs(600).select("id", "day", "n").orderBy("id").collect().toSeq
+    def rows(cat: Catalog, t: String) =
+      cat.readRaw(t).select("id", "day", "n").orderBy("id").collect().toSeq
+    val cat = Catalog(spark, root)
+
+    // the first read adopts: same rows, served from the new snapshot
+    assert(!fs.exists(s"$root/t/_manifest"))
+    assert(rows(cat, "t") == want)
+    val adopted = state(cat, "t")
+    assert(adopted.seq == 1L && adopted.entries.map(_.rel).toSet ==
+      fs.dataFilesUnder(s"$root/t").flatMap(fs.relativeTo(s"$root/t", _)).toSet)
+    assert(cat.readRaw("t").queryExecution.executedPlan.toString
+      .contains("PreListedFileIndex"))
+
+    // the first mutation adopts too, then commits its own change on top
+    cat.deleteWhereLight("u", col("n") > 80)
+    assert(state(cat, "u").seq == 2L)
+    assert(rows(cat, "u") == want.filter(_.getLong(2) <= 80))
+
+    // two first readers race: both adoption commits pass the stale-base
+    // check before either seals (the barrier on the snapshot staging
+    // write), exactly one seal lands, and the loser reloads it
+    val staged = new java.util.concurrent.atomic.AtomicInteger(0)
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    graft.operators.FsOps.factory = conf => new graft.operators.FsOps(conf) {
+      override def writeBytes(p: String, b: Array[Byte]): Unit = {
+        if (p.contains("/v/_manifest/.tmp-") && staged.incrementAndGet() <= 2)
+          barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        super.writeBytes(p, b)
+      }
+    }
+    val got = try {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val fs2 = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
+          def call() = rows(Catalog(spark, root), "v")
+        }))
+        fs2.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+    } finally graft.operators.FsOps.factory = conf => new graft.operators.FsOps(conf)
+    assert(staged.get() == 2, "both readers must have attempted the adoption")
+    assert(got.forall(_ == want))
+    val names = fs.listFiles(s"$root/v/_manifest").map(e => e._1.substring(e._1.lastIndexOf('/') + 1))
+    assert(names.count(_.startsWith("seal-")) == 1, names)
+    assert(names.count(_.startsWith("snap-")) == 1, names)
+  }
+
+  test("manifest-served read construction lists the same at 8 and 64 files") {
+    val lists = new java.util.concurrent.atomic.AtomicInteger(0)
+    def counted[T](f: => T): Int = {
+      graft.operators.FsOps.factory = conf => new graft.operators.FsOps(conf) {
+        override def listFiles(p: String) = { lists.incrementAndGet(); super.listFiles(p) }
+        override def listDirNames(p: String) = { lists.incrementAndGet(); super.listDirNames(p) }
+        override def listChildren(p: String) = { lists.incrementAndGet(); super.listChildren(p) }
+      }
+      lists.set(0)
+      try f finally graft.operators.FsOps.factory = conf => new graft.operators.FsOps(conf)
+      lists.get()
+    }
+    // (clean read, masked read) listing counts of a first construction;
+    // 64 files takes the split masked read, 8 the whole-table tag
+    def listsAt(files: Int): (Int, Int) = {
+      val cat = freshCat(s"man15_$files")
+      cat.create("t", docs(6400).repartition(files))
+      assert(TestAccess.fsOps(cat).dataFilesUnder(s"${cat.root}/t").size == files)
+      val clean = counted(Catalog(spark, cat.root).readRaw("t"))
+      cat.deleteWhereLight("t", col("id") % 10 === 0)
+      val masked = counted(Catalog(spark, cat.root).readRaw("t"))
+      assert(cat.readRaw("t").count() == 5760)
+      (clean, masked)
+    }
+    val at8 = listsAt(8)
+    assert(at8 == listsAt(64))
+    assert(at8._1 == 1, "a clean construction is one `_manifest` listing")
   }
 }

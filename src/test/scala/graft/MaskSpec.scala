@@ -1017,47 +1017,4 @@ class MaskSpec extends AnyFunSuite {
     // now literal: both paths ARE one code path
     intercept[IllegalStateException] { cat.hasPatches("t") }
   }
-
-  test("sidecar-fold crash windows read identically (add/install-first)") {
-    // dropSidecarsUnder's retired rm-then-move swap had a no-sidecar
-    // window: live MASK entries for UNTOUCHED partitions vanished mid
-    // swap — silent resurrection on listing-served tables. The fold now
-    // ADDs the kept mask files first (entries are a set; dropped ones
-    // reference replaced files and filter nothing) and installs kept
-    // patch batches under FRESH seqs before deleting originals. The
-    // windows are simulated by restoring the pre-mutation sidecar files
-    // BESIDE the folded ones on a legacy (listing-served) table: the
-    // union state must read exactly like the committed state.
-    val cat = freshCat("foldwin")
-    try {
-      spark.conf.set("spark.graft.manifestEnabled", "false")
-      cat.create("t", docs(3000).repartition(3, col("lang")), Seq("lang"))
-      cat.deleteWhereLight("t", col("id") % 4 === 0)      // mask, all langs
-      cat.updateWhereLight("t", col("id") % 5 === 0, Map("n" -> lit(7777L)))
-      cat.updateWhereLight("t", col("id") % 7 === 0, Map("n" -> lit(8888L)))
-      // stash the pre-mutation sidecars (the "originals" of the window)
-      val stash = Files.createTempDirectory("foldwin_stash").toString
-      val fsOps = graft.operators.TestAccess.fsOps(cat)
-      fsOps.copyTree(s"${cat.root}/t/_deletes", s"$stash/_deletes")
-      fsOps.copyTree(s"${cat.root}/t/_patches", s"$stash/_patches")
-      // heavy pruned delete on l2: rewrites l2, folds sidecars to l0/l1
-      cat.deleteWhere("t", col("lang") === "l2" && col("id") % 2 === 1)
-      val committed = cat.readRaw("t").orderBy("id").collect().toSeq
-      assert(cat.hasDeletes("t") && cat.hasPatches("t")) // l0/l1 still live
-      // crash window: originals back BESIDE the folded mask files
-      fsOps.listFiles(s"$stash/_deletes").map(_._1)
-        .filter(_.endsWith(".parquet")).foreach { f =>
-          val n = f.substring(f.lastIndexOf('/') + 1)
-          fsOps.copyTree(f, s"${cat.root}/t/_deletes/orig-$n")
-        }
-      assert(cat.readRaw("t").orderBy("id").collect().toSeq == committed)
-      // crash window: original patch batches back beside the installed
-      // (higher-seq) rewrites — sequential application, same values
-      fsOps.listChildren(s"$stash/_patches").foreach { case (n, isDir) =>
-        if (isDir) fsOps.copyTree(s"$stash/_patches/$n",
-          s"${cat.root}/t/_patches/$n")
-      }
-      assert(cat.readRaw("t").orderBy("id").collect().toSeq == committed)
-    } finally spark.conf.set("spark.graft.manifestEnabled", "true")
-  }
 }

@@ -10,7 +10,7 @@ class MvccCatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshCat(name: String): MvccCatalog =
-    MvccCatalog(spark, s"/root/repo/target/tmp/mvcc_spec_$name")
+    MvccCatalog(spark, s"${TestSpark.tmpRoot}/mvcc_spec_$name")
 
   private def dataFiles(cat: MvccCatalog, table: String): Int =
     new java.io.File(s"${cat.root}/$table/data").listFiles()

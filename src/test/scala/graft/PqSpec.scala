@@ -35,7 +35,7 @@ class PqSpec extends AnyFunSuite {
 
   test("save/load round-trip: codebooks bit-identical, codes table equal, search identical") {
     val enc = PqIndex.encodedCached(e, TestSpark.sf, model, "embedding")
-    val path = "/root/repo/target/tmp/pq_saveload_spec"
+    val path = s"${TestSpark.tmpRoot}/pq_saveload_spec"
     PqIndex.save(model, enc, path)
     val (lModel, lEnc) = PqIndex.load(spark, path)
     assert(lModel.flat.toSeq == model.flat.toSeq, "codebooks must round-trip exactly")
@@ -166,7 +166,7 @@ class PqSpec extends AnyFunSuite {
     import graft.operators.Sq8Index
     val sq = Sq8Index.fitCached(e, TestSpark.sf, "embedding")
     val (enc, n) = Sq8Index.encodedCached(e, TestSpark.sf, sq, "embedding")
-    val path = "/root/repo/target/tmp/sq8_saveload_spec"
+    val path = s"${TestSpark.tmpRoot}/sq8_saveload_spec"
     Sq8Index.save(sq, enc, path)
     val (lsq, lEnc, lN) = Sq8Index.load(spark, path)
     assert(lsq.mins.toSeq == sq.mins.toSeq && lsq.scales.toSeq == sq.scales.toSeq)

@@ -95,7 +95,7 @@ class ServingPinSpec extends AnyFunSuite {
     val compacted = inserted.compact()
     compacted.delete(compacted.topK(terms, 2).map(_._1))
     val purged = compacted.purgeDeleted()
-    val path = AnnIndex.tmpRoot + "/bm25_pin_spec"
+    val path = s"${TestSpark.tmpRoot}/bm25_pin_spec"
     Bm25Index.save(spark, inserted, path)
     val loaded = Bm25Index.load(spark, path)
     try {
@@ -118,7 +118,7 @@ class ServingPinSpec extends AnyFunSuite {
     val (appended, _) = IvfGraph.append(ivf, batch, "vec_id", "embedding", m = 8, efC = 32)
     val (inserted, _) = IvfGraph.insertInto(ivf, batch, "vec_id", "embedding", m = 8, efC = 32)
     val (removed, _) = IvfGraph.remove(ivf, ivf.topK(q, 3, 2, 32)._1.map(_._1), m = 8, efC = 32)
-    val path = AnnIndex.tmpRoot + "/ivfgraph_pin_spec"
+    val path = s"${TestSpark.tmpRoot}/ivfgraph_pin_spec"
     IvfGraph.save(spark, ivf, path)
     val loaded = IvfGraph.load(spark, path)
     try {
@@ -139,7 +139,7 @@ class ServingPinSpec extends AnyFunSuite {
     val batch = indexed.filter(col("cluster_id") < 3)
       .select((col("vec_id") + 20000000L).as("vec_id"), col("embedding"))
     val (appended, _) = IvfGraph.append(ivf, batch, "vec_id", "embedding", m = 8, efC = 32)
-    val path = AnnIndex.tmpRoot + "/ivfgraph_route_spec"
+    val path = s"${TestSpark.tmpRoot}/ivfgraph_route_spec"
     IvfGraph.save(spark, appended, path)
     val loaded = IvfGraph.load(spark, path)
     try {
